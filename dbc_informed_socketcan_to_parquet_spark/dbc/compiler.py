@@ -2,25 +2,29 @@
 
 Replaces the reference's per-frame interpretive decode loop
 (/root/reference/src/decoder.cpp:76-129) with driver-side expression
-generation: one Spark Column per signal, all derived from a single shared
-payload-word column, so a 100-signal DBC decodes in one WholeStageCodegen
-stage with zero Python in the data path.
+generation: one Spark Column per signal, each a shift and mask on a
+payload-word column that ``decode_wide`` computes once per frame in its own
+projection, so a 100-signal DBC decodes in one WholeStageCodegen stage with
+zero Python in the data path and a plan that grows linearly with DBC width.
 
 Scale notes (100 TB):
 - The known-id filter (T6) is an ``isin`` over a driver-side literal list —
   pushed into the parquet/text scan by Catalyst; for very large dictionaries
   it degrades gracefully to a broadcast left-semi join (both provided).
-- Wide decode = N pure projections; no shuffle is introduced until the
-  downsample aggregation.
+- Wide decode = a word projection plus N pure projections; no shuffle is
+  introduced until the downsample aggregation.
 """
 
 from __future__ import annotations
+
+from collections.abc import Mapping
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from dbc_informed_socketcan_to_parquet_spark.dbc.spec import BOOL, DbcSpec, MessageSpec, SignalSpec
 from dbc_informed_socketcan_to_parquet_spark.functions.bitfield import (
+    byteswap64,
     extract_bits,
     ieee754_float32,
     motorola_lsb,
@@ -28,6 +32,9 @@ from dbc_informed_socketcan_to_parquet_spark.functions.bitfield import (
     payload_le_u64,
     sign_extend,
 )
+
+#: byte order -> column holding that payload word inside ``decode_wide``
+_WORD_COLS = {"big": "_word_be", "little": "_word_le"}
 
 
 class DecodeCompiler:
@@ -43,19 +50,29 @@ class DecodeCompiler:
         self.data_col = data_col
 
     # -- signal-level ------------------------------------------------------
+    #
+    # ``words`` maps byte order ("big" / "little") to a column that already
+    # holds that payload word; ``decode_wide`` passes references to its word
+    # projection.  Without it the word is built inline from the data column
+    # — the form for one-off expressions over plain frames.
 
-    def raw_expr(self, sig: SignalSpec) -> Column:
+    def raw_expr(self, sig: SignalSpec, words: Mapping[str, Column] | None = None) -> Column:
         """Unsigned raw bit-field of one signal from the payload word."""
-        data = F.col(self.data_col)
-        if sig.byte_order == "little":
-            word = payload_le_u64(data)
-            lsb = sig.start_bit
+        little = sig.byte_order == "little"
+        if words is not None:
+            word = words[sig.byte_order]
         else:
-            word = payload_be_u64(data)
-            lsb = motorola_lsb(sig.start_bit, sig.bit_length)
+            data = F.col(self.data_col)
+            word = payload_le_u64(data) if little else payload_be_u64(data)
+        lsb = sig.start_bit if little else motorola_lsb(sig.start_bit, sig.bit_length)
         return extract_bits(word, lsb, sig.bit_length)
 
-    def phys_expr(self, sig: SignalSpec, msg: MessageSpec | None = None) -> Column:
+    def phys_expr(
+        self,
+        sig: SignalSpec,
+        msg: MessageSpec | None = None,
+        words: Mapping[str, Column] | None = None,
+    ) -> Column:
         """Physical value: raw → (sign extend) → reinterpret/scale → cast.
 
         Mirrors dbcppp RawToPhys semantics (phys = raw * factor + offset,
@@ -64,14 +81,13 @@ class DecodeCompiler:
 
         The message gate is applied by *arithmetic masking*
         (``value + CASE WHEN gate THEN 0 END``), not ``CASE WHEN gate THEN
-        value END``: the value subtree stays UNCONDITIONAL, so Catalyst's
-        codegen subexpression elimination shares the payload-word assembly
-        (and the candump parse chain feeding it) across all signals of a
-        message — measured ~2.3× on a 5-signal decode, and the win grows
-        linearly with DBC width.  Wrong-message rows compute a wasted word
-        (cheap integer ops) and null out via ``x + NULL = NULL``.
+        value END``: the value subtree stays UNCONDITIONAL, so when the word
+        is built inline (no ``words``) codegen subexpression elimination can
+        share it across the signals of one projection.  Wrong-message rows
+        compute a wasted field (cheap integer ops) and null out via
+        ``x + NULL = NULL``.
         """
-        raw = self.raw_expr(sig)
+        raw = self.raw_expr(sig, words)
         if sig.is_float32:
             num = ieee754_float32(raw)
         else:
@@ -87,7 +103,7 @@ class DecodeCompiler:
             # Multiplexed signal: additionally require the mux switch value
             # (T5, /root/reference/src/decoder.cpp:85-88).
             if sig.mux_switch_value is not None and msg.mux_switch is not None:
-                sw = self.raw_expr(msg.mux_switch)
+                sw = self.raw_expr(msg.mux_switch, words)
                 gate = gate & (sw == F.lit(sig.mux_switch_value))
             num = num + F.when(gate, F.lit(0))
         value = (num != 0) if sig.type_tag == BOOL else num
@@ -139,14 +155,34 @@ class DecodeCompiler:
         just N conditional projections — no groupBy, no extra scan.
         Downstream, the bucket downsample (operators/bucket.py) collapses
         rows per time bucket.
+
+        The big-endian payload word is computed once per frame in its own
+        projection, and the little-endian word — only when some signal is
+        Intel — as a byte swap of that column.  Every signal is then a
+        shift and mask on a column reference, so the plan holds one word
+        subtree however wide the DBC is.  ``CollapseProject`` keeps the word
+        projection because each word is referenced more than once and is
+        not a cheap expression.
         """
         if filter_known:
             frames = self.known_id_filter(frames)
+        passthrough = list(dict.fromkeys([*keep_cols, "ts", self.can_id_col]))
+        framed = frames.select(
+            *passthrough, payload_be_u64(F.col(self.data_col)).alias(_WORD_COLS["big"])
+        )
+        words = {"big": F.col(_WORD_COLS["big"])}
+        if any(
+            s is not None and s.byte_order == "little"
+            for m in self.spec.messages
+            for s in (*m.signals, m.mux_switch)
+        ):
+            framed = framed.select("*", byteswap64(words["big"]).alias(_WORD_COLS["little"]))
+            words["little"] = F.col(_WORD_COLS["little"])
         cols: list[Column] = [F.col(c) for c in keep_cols]
         cols.append((F.col("ts") * 1000.0).alias(time_col))
         for msg, sig in self.spec.all_signals():
-            cols.append(self.phys_expr(sig, msg).alias(sig.column_name))
-        return frames.select(*cols)
+            cols.append(self.phys_expr(sig, msg, words).alias(sig.column_name))
+        return framed.select(*cols)
 
     def signal_spec_df(self, spark) -> DataFrame:
         """The dictionary as a small DataFrame (broadcastable dimension) —

@@ -8,11 +8,15 @@ Here both are *driver-side generated expressions* over built-in
 Python in the hot path.  A pandas-UDF ``struct.unpack`` oracle lives in
 ``tests/`` only.
 
-Representation choice: the 8-byte payload is materialised once per frame as
-a signed 64-bit long whose *bit pattern* equals the unsigned payload word
-(Java long arithmetic wraps, so ``b7 << 56`` with the top bit set is simply
-the right bit pattern).  All per-signal extraction is then shifts + masks on
-that one column — Catalyst CSE keeps it single-evaluation across signals.
+Representation choice: the 8-byte payload is carried as a signed 64-bit
+long whose *bit pattern* equals the unsigned payload word (Java long
+arithmetic wraps, so ``b7 << 56`` with the top bit set is simply the right
+bit pattern).  ``DecodeCompiler.decode_wide`` materialises that word once
+per frame as a column of its own projection (and the little-endian word as
+a :func:`byteswap64` of that column), so per-signal extraction is shifts +
+masks on a column reference and the plan grows linearly with DBC width.
+The ``payload_*`` functions below embed the whole word subtree wherever
+they are used; they serve one-off expressions over plain frames.
 """
 
 from __future__ import annotations
@@ -36,16 +40,17 @@ def payload_be_u64(data: Column) -> Column:
 
 
 def payload_le_u64(data: Column) -> Column:
-    """Little-endian (Intel) payload word: byte 0 is the least significant.
+    """Little-endian (Intel) payload word: byte 0 is the least significant."""
+    return byteswap64(payload_be_u64(data))
 
-    Byte-swap of the big-endian word — pure integer shifts/masks, all
-    JVM-side; Catalyst's subexpression elimination shares the underlying
-    conv pair across every signal of a message.
-    """
-    be = payload_be_u64(data)
+
+def byteswap64(word: Column) -> Column:
+    """Reverse the byte order of a 64-bit word — pure integer shifts/masks,
+    all JVM-side.  ``word`` appears eight times in the result, so pass a
+    column reference, not a subtree."""
     out = F.lit(0).cast("long")
     for i in range(8):
-        byte_i = F.shiftrightunsigned(be, 8 * (7 - i)).bitwiseAND(F.lit(255))
+        byte_i = F.shiftrightunsigned(word, 8 * (7 - i)).bitwiseAND(F.lit(255))
         out = out.bitwiseOR(F.shiftleft(byte_i, 8 * i))
     return out
 

@@ -52,9 +52,12 @@ def durable_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     its subtree a second time when the files are written.  Lazy call
     sites here are compute-once *performance* devices whose
     materialization must happen inside the consuming action, not
-    fault-tolerance boundaries — executor loss under localCheckpoint
-    fails the action (recoverable by re-running it), which is the
-    cheaper side of the trade against a guaranteed doubled pass.
+    fault-tolerance boundaries.  Once a lazy ``localCheckpoint`` has
+    materialized, its lineage is cut: losing an executor that holds its
+    blocks fails every later action on the returned frame, and re-running
+    the action does not help — the caller must rebuild the plan from its
+    sources.  That is the cheaper side of the trade against a guaranteed
+    doubled pass.
 
     Spark Connect exposes no ``sparkContext``; there the probe fails and
     we use ``localCheckpoint`` (Connect-supported since 4.0), matching

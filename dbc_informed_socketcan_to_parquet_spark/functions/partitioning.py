@@ -63,7 +63,8 @@ def fan_out(
     input-size-adaptive, not host-tuned — the same call fans out as soon
     as the input carries real bytes.  When the estimate is unavailable
     the gate fails OPEN (fans out): under-parallelizing at scale is the
-    expensive mistake.
+    expensive mistake.  ``force=True`` skips the gate: a projection
+    barrier is needed whatever the input size.
 
     Spark Connect exposes neither ``sparkContext`` nor ``df.rdd``, so
     the partition-count probe is impossible there; under Connect we skip
@@ -95,7 +96,7 @@ def fan_out(
     # Python-side RDD conversion plan is built, unlike ``df.rdd``.
     n = df._jdf.queryExecution().toRdd().getNumPartitions()
     if n < target:
-        if min_bytes > 0:
+        if min_bytes > 0 and not force:
             try:
                 est = int(str(
                     df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()

@@ -21,12 +21,27 @@ Two physical strategies:
   and coalesce.  Work is O(n) with one narrow shuffle (the within-block
   window sorts block-locally) plus one broadcast join: no global sort, no
   single-task stage.
+
+Each stage (fill, carry-out, carry-in, coalesce) is ONE projection or
+aggregate over all columns, so the plan grows linearly with the number of
+columns; a ``withColumn`` per column would re-analyse the whole plan once
+per column.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+#: ``forward_fill_blocks`` block width when the caller names none, in
+#: ``order_col`` units — one minute for the engine's millisecond axis.
+DEFAULT_BLOCK_WIDTH = 60_000.0
+
+
+def _replace(df: DataFrame, exprs: dict[str, Column], out_cols: list[str]) -> DataFrame:
+    """One ``select`` of ``out_cols`` in order, each taken from ``exprs``
+    when present, else passed through."""
+    return df.select(*[exprs[c].alias(c) if c in exprs else c for c in out_cols])
 
 
 def forward_fill(
@@ -40,10 +55,7 @@ def forward_fill(
         cols = [c for c in df.columns if c != order_col and c not in (partition_cols or [])]
     w = Window.orderBy(order_col) if not partition_cols else Window.partitionBy(*partition_cols).orderBy(order_col)
     w = w.rowsBetween(Window.unboundedPreceding, 0)
-    out = df
-    for c in cols:
-        out = out.withColumn(c, F.last(c, ignorenulls=True).over(w))
-    return out
+    return _replace(df, {c: F.last(c, ignorenulls=True).over(w) for c in cols}, df.columns)
 
 
 def forward_fill_blocks(
@@ -51,38 +63,20 @@ def forward_fill_blocks(
     order_col: str,
     cols: list[str] | None = None,
     block_width: float | None = None,
-    num_blocks: int = 256,
 ) -> DataFrame:
     """Scalable LOCF: aligned time blocks + carry-in broadcast.
 
-    ``block_width`` is in units of ``order_col`` (e.g. ms); when omitted it
-    is derived from the observed min/max so ~``num_blocks`` blocks result.
+    ``block_width`` is in units of ``order_col`` (e.g. ms) and defaults to
+    :data:`DEFAULT_BLOCK_WIDTH`; a fixed width needs no pass over the data.
     Correctness is independent of the block width; width only tunes
-    parallelism.
+    parallelism (one block is one window task).
     """
     if cols is None:
         cols = [c for c in df.columns if c != order_col]
-
-    if block_width is None:
-        # derive the width lazily: broadcast the 1-row min/max aggregate
-        # into the same action instead of an eager driver-side .first()
-        # pass over the (possibly huge) input
-        bounds = df.agg(F.min(order_col).alias("_lo"), F.max(order_col).alias("_hi"))
-        width = (F.col("_hi") - F.col("_lo")) / F.lit(float(num_blocks))
-        blocked = (
-            df.crossJoin(F.broadcast(bounds))
-            .withColumn(
-                "_blk",
-                F.when(width <= 0, F.lit(0))
-                .otherwise(F.floor((F.col(order_col) - F.col("_lo")) / width))
-                .cast("long"),
-            )
-            .drop("_lo", "_hi")
-        )
-    else:
-        blocked = df.withColumn(
-            "_blk", F.floor(F.col(order_col) / F.lit(float(block_width))).cast("long")
-        )
+    width = DEFAULT_BLOCK_WIDTH if block_width is None else float(block_width)
+    if width <= 0:
+        raise ValueError(f"block_width must be positive, got {block_width!r}")
+    blocked = df.withColumn("_blk", F.floor(F.col(order_col) / F.lit(width)).cast("long"))
 
     # Both consumers below (the within-block fill window and the carry-out
     # aggregate) need the data clustered by _blk.  Establish that with ONE
@@ -96,9 +90,9 @@ def forward_fill_blocks(
 
     # Pass 1: fill within each block (block-local sort, fully parallel).
     w_in = Window.partitionBy("_blk").orderBy(order_col).rowsBetween(Window.unboundedPreceding, 0)
-    filled = blocked
-    for c in cols:
-        filled = filled.withColumn(c, F.last(c, ignorenulls=True).over(w_in))
+    filled = _replace(
+        blocked, {c: F.last(c, ignorenulls=True).over(w_in) for c in cols}, blocked.columns
+    )
 
     # Pass 2: per-block carry-out = value at the max ord where c is non-null.
     carry_out = blocked.groupBy("_blk").agg(
@@ -115,6 +109,6 @@ def forward_fill_blocks(
     )
 
     out = filled.join(F.broadcast(carry_in), "_blk", "left")
-    for c in cols:
-        out = out.withColumn(c, F.coalesce(F.col(c), F.col(f"_carry_{c}"))).drop(f"_carry_{c}")
-    return out.drop("_blk")
+    return _replace(
+        out, {c: F.coalesce(F.col(c), F.col(f"_carry_{c}")) for c in cols}, df.columns
+    )

@@ -41,6 +41,13 @@ def normalize_time(frames: DataFrame, mode: str = "min", time_col: str = "ts") -
     ``mode="min"``  — subtract min(ts) (scan-order-independent);
     ``mode="none"`` — keep absolute epoch, Time_ms = ts*1000
     (``--no-adjust-timestamp``, /root/reference/src/arguments.h:93-96).
+
+    ``mode="min"`` keeps its own ``min(ts)`` scan of the input on purpose,
+    so a conversion scans the log twice: once for this minimum, once for
+    the data.  The reference subtracts the FIRST line's stamp instead
+    (fileInput.cpp:16-31); that would need no aggregate, but it differs
+    from ``min(ts)`` whenever the log is not time-sorted, so switching
+    would change the output.  Left as is.
     """
     if mode == "none":
         return frames.withColumn("Time_ms", F.col(time_col) * 1000.0)

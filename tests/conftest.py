@@ -60,6 +60,22 @@ BO_ 258 MUX: 8 ECU
 """
 
 
+def wide_spec(n_messages: int) -> DbcSpec:
+    """``n_messages`` × 8 one-byte signals (ids 0x200 up): even messages
+    Intel, odd ones Motorola; odd bytes signed, every fourth byte scaled.
+    Signal ``j`` of a message is payload byte ``j``."""
+    messages = []
+    for m in range(n_messages):
+        order = "little" if m % 2 == 0 else "big"
+        signals = []
+        for j in range(8):
+            start = 8 * j if order == "little" else 8 * j + 7   # Motorola: MSB of byte j
+            factor, offset = (0.5, -3.0) if j % 4 == 2 else (1.0, 0.0)
+            signals.append(SignalSpec(f"M{m}_S{j}", start, 8, order, j % 2 == 1, factor, offset))
+        messages.append(MessageSpec(0x200 + m, f"MSG{m}", 8, tuple(signals)))
+    return DbcSpec(messages=tuple(messages))
+
+
 def le_line(ts: float, can_id: int, payload: int) -> str:
     """Render a candump line from a little-endian payload word."""
     return f"({ts:.6f}) vcan0 {can_id:X}#{struct.pack('<Q', payload).hex().upper()}"

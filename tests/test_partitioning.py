@@ -47,6 +47,9 @@ def test_fan_out_min_bytes_gate(spark, tmp_path):
     assert fan_out(df, min_bytes=est * 10).count() == 1000
     # default (min_bytes=0) keeps the unconditional r15 behavior
     assert fan_out(df).rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    # force keeps its projection-barrier exchange below the floor too
+    forced = fan_out(df, force=True, min_bytes=est * 10)
+    assert forced.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
 
 
 def test_salted_agg_matches_plain_groupby(spark):

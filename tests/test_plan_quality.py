@@ -111,6 +111,48 @@ def test_run_batch_cache0_no_global_sort(spark, tiny_spec, tmp_path):
     assert "rangepartitioning" in plan2
 
 
+def test_decode_wide_word_subtree_independent_of_width(spark, tmp_path):
+    """decode_wide computes the payload word once per frame in its own
+    projection; every signal references that column.  The optimized plan
+    must therefore hold as many ``conv(`` calls (the hex → word step) at
+    64 signals as at 16, i.e. the projection survives CollapseProject."""
+    from tests.conftest import le_line, wide_spec
+
+    from dbc_informed_socketcan_to_parquet_spark.functions.candump import parse_candump_lines
+
+    log = tmp_path / "cap.log"
+    log.write_text(le_line(1700000000.0, 0x200, 0x0102030405060708) + "\n")
+    frames = parse_candump_lines(spark.read.text(str(log)))
+
+    def convs(n_messages: int) -> int:
+        wide = DecodeCompiler(wide_spec(n_messages)).decode_wide(frames)
+        return wide._jdf.queryExecution().optimizedPlan().toString().count("conv(")
+
+    n16, n64 = convs(2), convs(8)
+    assert n16 > 0
+    assert n16 == n64
+
+
+def test_run_batch_cache_ffill_scans_log_twice(spark, tiny_spec, tmp_path):
+    """--cache 10 --forward-fill reads the log once for the data and once
+    for the time-normalization minimum; the forward-fill block width is
+    fixed, so no third scan derives it from data bounds."""
+    from tests.conftest import le_line
+
+    from dbc_informed_socketcan_to_parquet_spark.plans.pipeline import (
+        DecodePipeline,
+        PipelineConfig,
+    )
+
+    log = tmp_path / "cap.log"
+    log.write_text("\n".join(le_line(1700000000.0 + 0.004 * i, 0x100, i) for i in range(50)) + "\n")
+    cfg = PipelineConfig(input_path=str(log), cache_ms=10, forward_fill=True)
+    out = DecodePipeline(cfg, spec=tiny_spec).run_batch(spark)
+    out.collect()
+    final = out._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+    assert final.count("FileScan text") == 2
+
+
 def test_q5_supplier_join_not_hint_broadcast(spark):
     """Q5's nation/region joins stay explicitly broadcast (fixed 25/5-row
     dims), but the supplier join must carry NO broadcast hint: supplier
