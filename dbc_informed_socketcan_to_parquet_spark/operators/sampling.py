@@ -212,49 +212,88 @@ def pack_sequences(
 
     from pyspark import TaskContext
 
+    out_schema = _pack_schema(df, id_col, max_tokens)
+
+    def kernel(batches):
+        rows = [pdf[[id_col, token_col]] for pdf in batches]
+        if rows:
+            yield _ffd_packs(
+                pd.concat(rows, ignore_index=True), TaskContext.get().partitionId(),
+                id_col, token_col, max_tokens,
+            )
+
+    return df.select(id_col, token_col).mapInPandas(kernel, out_schema)
+
+
+def pack_sequences_hashed(
+    df: DataFrame,
+    token_col: str,
+    max_tokens: int,
+    num_groups: int,
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """:func:`pack_sequences` over a content-derived placement: documents
+    are grouped by ``pmod(hash(id), num_groups)`` — exactly the partition
+    ``repartition(num_groups, id)`` would give them — and each group is
+    packed as one partition with that group index as its partition id.
+    The packs are therefore identical to ``pack_sequences`` over that
+    repartition, whatever the input's parallelism, but only non-empty
+    groups reach Python and many groups share one task, so a small input
+    no longer pays for ``num_groups`` mostly empty Python tasks.
+    """
+    out_schema = _pack_schema(df, id_col, max_tokens)
+
+    def kernel(key, pdf):
+        return _ffd_packs(pdf[[id_col, token_col]], int(key[0]), id_col, token_col, max_tokens)
+
+    return (
+        df.select(
+            id_col, token_col,
+            F.pmod(F.hash(F.col(id_col)), F.lit(int(num_groups))).alias("_pack_group"),
+        )
+        .groupBy("_pack_group")
+        .applyInPandas(kernel, out_schema)
+    )
+
+
+def _pack_schema(df: DataFrame, id_col: str, max_tokens: int) -> str:
     if max_tokens <= 0:
         raise ValueError("max_tokens must be positive")
     id_type = df.schema[id_col].dataType.simpleString()
-    out_schema = (
+    return (
         f"pack_id string, doc_ids array<{id_type}>, n_docs int, "
         f"total_tokens long, overflow boolean"
     )
 
-    def kernel(batches):
-        pid = TaskContext.get().partitionId()
-        rows = []
-        for pdf in batches:
-            rows.append(pdf[[id_col, token_col]])
-        if not rows:
-            return
-        all_rows = pd.concat(rows, ignore_index=True)
-        null_mask = all_rows[token_col].isna()
-        if null_mask.any():
-            bad = all_rows.loc[null_mask, id_col].head(5).tolist()
-            raise ValueError(
-                f"pack_sequences: {int(null_mask.sum())} document(s) have NULL "
-                f"{token_col!r} (first ids: {bad}) — token accounting would be "
-                "lossy; fill or filter them explicitly upstream"
-            )
-        all_rows = all_rows.sort_values(
-            [token_col, id_col], ascending=[False, True], kind="stable"
-        )
-        tokens = all_rows[token_col].to_numpy(dtype="int64")
-        assign, n_packs, totals = _ffd_assign(tokens, max_tokens)
-        ids_by_pack: list[list] = [[] for _ in range(n_packs)]
-        for doc_id, p in zip(all_rows[id_col].tolist(), assign):
-            ids_by_pack[p].append(doc_id)
-        yield pd.DataFrame(
-            {
-                "pack_id": [f"{pid}-{i}" for i in range(n_packs)],
-                "doc_ids": ids_by_pack,
-                "n_docs": [len(ids) for ids in ids_by_pack],
-                "total_tokens": totals[:n_packs],
-                "overflow": [t > max_tokens for t in totals[:n_packs]],
-            }
-        )
 
-    return df.select(id_col, token_col).mapInPandas(kernel, out_schema)
+def _ffd_packs(rows, pid: int, id_col: str, token_col: str, max_tokens: int):
+    """FFD-pack one partition's ``(id, tokens)`` pandas frame into the
+    :func:`pack_sequences` output rows, pack ids ``{pid}-{index}``."""
+    import pandas as pd
+
+    null_mask = rows[token_col].isna()
+    if null_mask.any():
+        bad = rows.loc[null_mask, id_col].head(5).tolist()
+        raise ValueError(
+            f"pack_sequences: {int(null_mask.sum())} document(s) have NULL "
+            f"{token_col!r} (first ids: {bad}) — token accounting would be "
+            "lossy; fill or filter them explicitly upstream"
+        )
+    rows = rows.sort_values([token_col, id_col], ascending=[False, True], kind="stable")
+    tokens = rows[token_col].to_numpy(dtype="int64")
+    assign, n_packs, totals = _ffd_assign(tokens, max_tokens)
+    ids_by_pack: list[list] = [[] for _ in range(n_packs)]
+    for doc_id, p in zip(rows[id_col].tolist(), assign):
+        ids_by_pack[p].append(doc_id)
+    return pd.DataFrame(
+        {
+            "pack_id": [f"{pid}-{i}" for i in range(n_packs)],
+            "doc_ids": ids_by_pack,
+            "n_docs": [len(ids) for ids in ids_by_pack],
+            "total_tokens": totals[:n_packs],
+            "overflow": [t > max_tokens for t in totals[:n_packs]],
+        }
+    )
 
 
 def _ffd_assign(tokens, max_tokens: int):

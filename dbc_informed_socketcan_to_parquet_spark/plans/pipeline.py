@@ -29,10 +29,6 @@ from dbc_informed_socketcan_to_parquet_spark.sinks import console_sink, write_pa
 from dbc_informed_socketcan_to_parquet_spark.sources.candump import normalize_time, read_candump
 from dbc_informed_socketcan_to_parquet_spark.sources.parquet_reingest import read_legacy_parquet
 
-#: downsampled rows per forward-fill block: the block width is this many
-#: ``--cache`` buckets, so it needs no pass over the data
-FFILL_BUCKETS_PER_BLOCK = 4096
-
 
 @dataclass
 class PipelineConfig:
@@ -96,8 +92,7 @@ class DecodePipeline:
             did_downsample = cfg.cache_ms > 0
         if cfg.forward_fill:
             sig_cols = [s.column_name for _, s in self.spec.all_signals() if s.column_name in out.columns]
-            width = FFILL_BUCKETS_PER_BLOCK * cfg.cache_ms if did_downsample else None
-            out = forward_fill_blocks(out, "Time_ms", sig_cols, block_width=width)
+            out = forward_fill_blocks(out, "Time_ms", sig_cols)
         ordered = ["Time_ms"] + [s.column_name for _, s in self.spec.all_signals() if s.column_name in out.columns]
         out = out.select(*ordered)
         # Ordering: post-downsample output is small (one row per bucket) —

@@ -79,12 +79,13 @@ def export_training_shards(
     + a verifiable manifest.
 
     Composition (every stage is an existing, tested operator):
-    deterministic pre-packing placement — the (id, tokens) projection is
-    repartitioned by hash(id) into exactly ``pack_partitions`` partitions,
-    so each FFD kernel sees the SAME document set whatever the input's
-    parallelism was — → ``pack_sequences`` (partition-local FFD; its
-    kernel re-sorts by (tokens desc, id) so within-partition order is
-    immaterial) → ``shuffle_deterministic`` keyed on a CONTENT-derived
+    deterministic pre-packing placement — ``pack_sequences_hashed`` packs
+    the (id, tokens) projection in exactly ``pack_partitions`` hash(id)
+    groups, the partitions ``repartition(pack_partitions, id)`` would
+    give, so each FFD kernel sees the SAME document set whatever the
+    input's parallelism was (its kernel re-sorts by (tokens desc, id) so
+    within-group order is immaterial), and only non-empty groups reach
+    Python → ``shuffle_deterministic`` keyed on a CONTENT-derived
     pack key (md5 of the pack's sorted doc ids, not the
     partition-ordinal ``pack_id``) into exactly ``num_shards`` hash
     shards → parquet write (one file per shard).
@@ -106,7 +107,7 @@ def export_training_shards(
     lives in the manifest fingerprints).
 
     Scale: two corpus-wide exchanges — the narrow (id, tokens) placement
-    repartition and the epoch repartition; the manifest aggregation is
+    grouping and the epoch repartition; the manifest aggregation is
     one grouped pass whose output is ``num_shards`` driver-sized rows.
     The manifest JSON is written driver-side next to the shards
     (object-store deployments would put it behind the same committer as
@@ -119,14 +120,11 @@ def export_training_shards(
 
     from dbc_informed_socketcan_to_parquet_spark.functions.hashing import md5_long
     from dbc_informed_socketcan_to_parquet_spark.operators.sampling import (
-        pack_sequences,
+        pack_sequences_hashed,
         shuffle_deterministic,
     )
 
-    placed = docs.select(id_col, token_col).repartition(
-        int(pack_partitions), F.col(id_col)
-    )
-    packs = pack_sequences(placed, token_col, max_tokens, id_col=id_col)
+    packs = pack_sequences_hashed(docs, token_col, max_tokens, int(pack_partitions), id_col=id_col)
     # content-derived pack identity: the partition-ordinal pack_id would
     # tie shard membership to the input partitioning (r5 ADVICE)
     packs = packs.withColumn(

@@ -214,6 +214,37 @@ def test_pack_sequences_null_tokens_raise(spark):
         pack_sequences(docs, "n_tokens", max_tokens=1000).collect()
 
 
+def test_pack_sequences_hashed_equals_repartitioned_pack(spark):
+    """The hash-grouped placement gives exactly the packs (ids included)
+    of pack_sequences over repartition(n, id), whatever the input's
+    partitioning — string ids and a NULL id included."""
+    from pyspark.errors import PythonException
+
+    from dbc_informed_socketcan_to_parquet_spark.operators.sampling import (
+        pack_sequences,
+        pack_sequences_hashed,
+    )
+
+    docs = spark.createDataFrame(
+        [(f"d{i}", i % 97 + 10) for i in range(600)] + [(None, 5)],
+        "doc_id string, n_tokens long",
+    )
+
+    def rows(df):
+        return sorted(
+            (p.pack_id, tuple(p.doc_ids), p.n_docs, p.total_tokens, p.overflow)
+            for p in df.collect()
+        )
+
+    want = rows(pack_sequences(docs.repartition(16, "doc_id"), "n_tokens", max_tokens=256))
+    assert rows(pack_sequences_hashed(docs.repartition(5), "n_tokens", 256, 16)) == want
+    assert rows(pack_sequences_hashed(docs.coalesce(1), "n_tokens", 256, 16)) == want
+
+    bad = spark.createDataFrame([(0, 100), (1, None)], "doc_id long, n_tokens long")
+    with pytest.raises(PythonException, match="NULL 'n_tokens'"):
+        pack_sequences_hashed(bad, "n_tokens", 1000, 4).collect()
+
+
 def test_ffd_kernel_matches_linear_scan_and_is_fast():
     """The segment-tree kernel must reproduce the r4 linear-scan FFD layout
     exactly, and beat it by ≥10× at a size where the O(n·packs) scan is
