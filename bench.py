@@ -331,7 +331,6 @@ def main() -> None:
     # stdout write of this process — nothing may print after it, or a
     # tail-capture window can clip the artifact the driver parses
     # (BENCH_r14.json parsed=null cost a full round of PERF comparison).
-    # scripts/check_bench_json.py verifies this end-to-end.
 
 
 def _curate_run(docs):

@@ -1504,7 +1504,10 @@ def main(argv: list[str] | None = None) -> None:
         host, _, port = args.socket_name.partition(":")
         run_stream(spark, cfg, host=host or "localhost", port=int(port or 9000))
         return
-    n = DecodePipeline(cfg).run_batch(spark).count()
+    out = DecodePipeline(cfg).run_batch(spark)
+    # Counting the returned lazy frame would re-run the whole pipeline;
+    # the written Parquet answers from its footers.
+    n = spark.read.parquet(cfg.output_path).count() if cfg.output_path else out.count()
     print(f"wrote {n} rows")
 
 

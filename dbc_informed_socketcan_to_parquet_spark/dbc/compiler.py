@@ -9,8 +9,7 @@ zero Python in the data path and a plan that grows linearly with DBC width.
 
 Scale notes (100 TB):
 - The known-id filter (T6) is an ``isin`` over a driver-side literal list —
-  pushed into the parquet/text scan by Catalyst; for very large dictionaries
-  it degrades gracefully to a broadcast left-semi join (both provided).
+  pushed into the parquet/text scan by Catalyst.
 - Wide decode = a word projection plus N pure projections; no shuffle is
   introduced until the downsample aggregation.
 """
@@ -133,22 +132,15 @@ class DecodeCompiler:
         Catalyst pushes it to the scan."""
         return frames.filter(F.col(self.can_id_col).isin(self.spec.known_ids()))
 
-    def known_id_semi_join(self, frames: DataFrame, spark) -> DataFrame:
-        """T6 as an explicit broadcast left-semi join against the dictionary
-        table — the form that scales to dictionaries too large for a
-        literal list."""
-        ids = spark.createDataFrame([(i,) for i in self.spec.known_ids()], f"{self.can_id_col} long")
-        return frames.join(F.broadcast(ids), self.can_id_col, "left_semi")
-
     def decode_wide(
         self,
         frames: DataFrame,
         time_col: str = "Time_ms",
         keep_cols: tuple[str, ...] = (),
-        filter_known: bool = True,
     ) -> DataFrame:
         """Sparse wide decode: one row per frame, one column per DBC signal,
-        NULL for signals not carried by the frame's message.
+        NULL for signals not carried by the frame's message.  Frames whose id
+        is not in the dictionary are dropped first (:meth:`known_id_filter`).
 
         This is the long→wide pivot (A3) in its shuffle-free form: because
         the signal→message mapping is known at compile time, the "pivot" is
@@ -164,8 +156,7 @@ class DecodeCompiler:
         projection because each word is referenced more than once and is
         not a cheap expression.
         """
-        if filter_known:
-            frames = self.known_id_filter(frames)
+        frames = self.known_id_filter(frames)
         passthrough = list(dict.fromkeys([*keep_cols, "ts", self.can_id_col]))
         framed = frames.select(
             *passthrough, payload_be_u64(F.col(self.data_col)).alias(_WORD_COLS["big"])
@@ -183,29 +174,3 @@ class DecodeCompiler:
         for msg, sig in self.spec.all_signals():
             cols.append(self.phys_expr(sig, msg, words).alias(sig.column_name))
         return framed.select(*cols)
-
-    def signal_spec_df(self, spark) -> DataFrame:
-        """The dictionary as a small DataFrame (broadcastable dimension) —
-        FIXTURES.md §1.3 schema."""
-        rows = []
-        for msg, sig in self.spec.all_signals():
-            rows.append(
-                (
-                    msg.can_id,
-                    sig.name,
-                    sig.start_bit,
-                    sig.bit_length,
-                    sig.byte_order,
-                    sig.is_signed,
-                    float(sig.factor),
-                    float(sig.offset),
-                    sig.is_float32,
-                    sig.mux_switch_value,
-                )
-            )
-        schema = (
-            "can_id long, signal_name string, start_bit int, bit_length int, "
-            "byte_order string, is_signed boolean, factor double, offset double, "
-            "is_float32 boolean, mux_switch_value int"
-        )
-        return spark.createDataFrame(rows, schema)

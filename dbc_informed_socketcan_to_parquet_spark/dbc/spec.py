@@ -115,11 +115,5 @@ class DbcSpec:
                 out.append((m, s))
         return out
 
-    def output_schema(self, time_col: str = "Time_ms") -> T.StructType:
-        fields = [T.StructField(time_col, T.DoubleType(), nullable=False)]
-        for _, s in self.all_signals():
-            fields.append(T.StructField(s.column_name, s.spark_type, nullable=True))
-        return T.StructType(fields)
-
     def known_ids(self) -> list[int]:
         return [m.can_id for m in self.messages]

@@ -11,7 +11,7 @@ from dbc_informed_socketcan_to_parquet_spark.functions.candump import (
     parse_candump_lines,
 )
 from dbc_informed_socketcan_to_parquet_spark.functions.hashing import md5_long
-from dbc_informed_socketcan_to_parquet_spark.functions.timeutil import bucket_ms, epoch_ms, utc_ms
+from dbc_informed_socketcan_to_parquet_spark.functions.timeutil import bucket_ms, epoch_ms
 
 __all__ = [
     "extract_bits",
@@ -25,5 +25,4 @@ __all__ = [
     "md5_long",
     "bucket_ms",
     "epoch_ms",
-    "utc_ms",
 ]

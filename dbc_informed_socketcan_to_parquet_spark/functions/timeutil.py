@@ -16,8 +16,6 @@ timestamps, for three reasons:
 
 from __future__ import annotations
 
-from datetime import datetime, timezone
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -25,17 +23,6 @@ from pyspark.sql import functions as F
 def epoch_ms(ts: Column) -> Column:
     """Epoch milliseconds (floor) of a timestamp column, TZ-independent."""
     return F.floor(F.unix_micros(ts) / F.lit(1000)).cast("long")
-
-
-def utc_ms(iso: str) -> int:
-    """Driver-side constant: epoch ms of an ISO date/datetime taken as UTC.
-
-    Used instead of comparing timestamps to string literals (which Spark
-    parses in session TZ)."""
-    dt = datetime.fromisoformat(iso)
-    if dt.tzinfo is None:
-        dt = dt.replace(tzinfo=timezone.utc)
-    return int(dt.timestamp() * 1000)
 
 
 def bucket_ms(ts_ms: Column, width_ms: float) -> Column:

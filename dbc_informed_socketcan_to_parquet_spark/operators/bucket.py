@@ -41,20 +41,16 @@ def bucket_downsample(
     time_col: str = "Time_ms",
     order_col: str | None = None,
     agg: str = "last",
-    extra_keys: list[str] | None = None,
 ) -> DataFrame:
     """Collapse a sparse wide frame-stream into one row per time bucket.
 
     ``cache_ms <= 0`` reproduces the reference default (row per message,
     /root/reference/src/arguments.h:29): no aggregation at all.
-    ``extra_keys`` allows per-entity streams (e.g. one CAN interface per
-    vehicle) to downsample independently without a second shuffle.
     """
     if signal_cols is None:
-        # exclude the grouping/order columns or they'd surface twice
+        # exclude the time/order columns or they'd surface twice
         # (once as keys, once as max_by aggregates) with duplicate names
-        skip = {time_col, order_col, *(extra_keys or [])}
-        signal_cols = [c for c in wide.columns if c not in skip]
+        signal_cols = [c for c in wide.columns if c not in (time_col, order_col)]
     if cache_ms is None or cache_ms <= 0:
         return wide
 
@@ -63,9 +59,8 @@ def bucket_downsample(
         raise ValueError(f"agg must be 'last' or 'first', got {agg!r}")
 
     bucket = bucket_ms(F.col(time_col), cache_ms).alias(time_col)
-    keys = [bucket] + [F.col(k) for k in (extra_keys or [])]
     aggs = [_one_value(c, ord_col, agg) for c in signal_cols if c != order_col]
-    return wide.groupBy(*keys).agg(*aggs)
+    return wide.groupBy(bucket).agg(*aggs)
 
 
 def rollup_cascade(
@@ -75,7 +70,6 @@ def rollup_cascade(
     time_col: str = "Time_ms",
     order_col: str | None = None,
     agg: str = "last",
-    extra_keys: list[str] | None = None,
 ) -> dict[float, DataFrame]:
     """Multi-resolution rollup: each coarser level re-aggregates the
     previous level instead of rescanning the raw stream.
@@ -107,15 +101,14 @@ def rollup_cascade(
                 f"resolutions must nest: {coarse} is not a multiple of {fine}"
             )
     if signal_cols is None:
-        skip = {time_col, order_col, *(extra_keys or [])}
-        signal_cols = [c for c in wide.columns if c not in skip]
+        signal_cols = [c for c in wide.columns if c not in (time_col, order_col)]
 
     out: dict[float, DataFrame] = {}
     cur, ord_c = wide, order_col
     for r in rs:
         cur = bucket_downsample(
             cur, r, signal_cols=signal_cols, time_col=time_col,
-            order_col=ord_c, agg=agg, extra_keys=extra_keys,
+            order_col=ord_c, agg=agg,
         )
         # coarser levels order by the fine bucket start: order_col (if
         # any) does not survive the first aggregation

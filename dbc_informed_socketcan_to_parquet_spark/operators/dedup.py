@@ -1217,6 +1217,12 @@ def near_dedup_against_corpus(
     ``verify_threshold``) form a tiny distinct set, anti-joined back
     broadcast.  Total corpus-side cost: one scan of the signature store.
 
+    Broadcast size: with ``verify_threshold`` set, every row of the
+    broadcast batch band table carries the batch doc's full signature, so
+    the broadcast holds about ``num_bands × num_perms × 8`` bytes per batch
+    doc (8 × 32 × 8 = 2 KiB at the defaults) on top of the band keys.
+    Without the threshold the band rows carry no signature.
+
     Signature parameters must match the store's (``minhash_read`` hands
     back the meta to pass in); ``corpus`` text is accepted as a
     convenience for small/one-shot runs.
@@ -2274,6 +2280,11 @@ def decon_report(
 
     Assumes ``id_col`` is unique per row (the corpus contract): exact
     copies sharing one id would collapse into its per-doc probe row.
+
+    Assumes bounded document length: the per-doc ``collect_set`` holds the
+    document's whole distinct window set — up to one 8-byte hash per token
+    position — in one aggregation buffer, so a single very long document
+    costs memory in proportion to its token count.
     """
     w = int(window_tokens)
     sn = int(shingle_n)

@@ -10,10 +10,9 @@ behavior).
 Two physical strategies:
 
 - :func:`forward_fill` — the canonical Spark LOCF: ``last(c, ignorenulls)``
-  over an unbounded-preceding row window.  With no partition key this
-  collapses to a single task; correct, and fine post-downsample (the
-  downsample already shrank the data by orders of magnitude), but not the
-  100 TB path.
+  over an unbounded-preceding row window over the whole frame, so it runs
+  as a single task; correct, and the reference the tests compare
+  :func:`forward_fill_blocks` against, but not the 100 TB path.
 - :func:`forward_fill_blocks` — scalable two-pass LOCF: split the time axis
   into aligned blocks, fill within blocks in parallel, compute each block's
   carry-out (last non-null per column — a tiny aggregate), prefix-fill the
@@ -44,17 +43,11 @@ def _replace(df: DataFrame, exprs: dict[str, Column], out_cols: list[str]) -> Da
     return df.select(*[exprs[c].alias(c) if c in exprs else c for c in out_cols])
 
 
-def forward_fill(
-    df: DataFrame,
-    order_col: str,
-    cols: list[str] | None = None,
-    partition_cols: list[str] | None = None,
-) -> DataFrame:
-    """LOCF over ``order_col``; optionally per ``partition_cols`` group."""
+def forward_fill(df: DataFrame, order_col: str, cols: list[str] | None = None) -> DataFrame:
+    """LOCF over ``order_col``."""
     if cols is None:
-        cols = [c for c in df.columns if c != order_col and c not in (partition_cols or [])]
-    w = Window.orderBy(order_col) if not partition_cols else Window.partitionBy(*partition_cols).orderBy(order_col)
-    w = w.rowsBetween(Window.unboundedPreceding, 0)
+        cols = [c for c in df.columns if c != order_col]
+    w = Window.orderBy(order_col).rowsBetween(Window.unboundedPreceding, 0)
     return _replace(df, {c: F.last(c, ignorenulls=True).over(w) for c in cols}, df.columns)
 
 

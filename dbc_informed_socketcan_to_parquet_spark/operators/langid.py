@@ -40,7 +40,7 @@ seed, round_to).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dbc_informed_socketcan_to_parquet_spark.functions.hashing import md5_long

@@ -28,8 +28,6 @@ from pyspark.sql import functions as F
 #: Feature vector size produced by the (fake) image featurizer.
 FAKE_FEATURE_DIM = 8
 
-MEDIA_SCHEMA = "content binary, media_type string, width int, height int, n_frames int"
-
 
 def attach_media(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Synthesize a multimodal table from a text corpus: content = utf-8

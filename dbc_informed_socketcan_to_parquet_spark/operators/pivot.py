@@ -15,7 +15,7 @@ is a single hash aggregation on the bucket key.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 

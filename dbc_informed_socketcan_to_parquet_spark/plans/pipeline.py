@@ -26,7 +26,7 @@ from dbc_informed_socketcan_to_parquet_spark.dbc.spec import DbcSpec
 from dbc_informed_socketcan_to_parquet_spark.operators.bucket import bucket_downsample
 from dbc_informed_socketcan_to_parquet_spark.operators.ffill import forward_fill_blocks
 from dbc_informed_socketcan_to_parquet_spark.sinks import console_sink, write_parquet
-from dbc_informed_socketcan_to_parquet_spark.sources.candump import normalize_time, read_candump
+from dbc_informed_socketcan_to_parquet_spark.sources.candump import read_candump
 from dbc_informed_socketcan_to_parquet_spark.sources.parquet_reingest import read_legacy_parquet
 
 

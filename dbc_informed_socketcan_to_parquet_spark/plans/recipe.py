@@ -236,10 +236,10 @@ def validate_recipe(recipe: dict) -> None:
     if "path" not in ing:
         raise ValueError("ingest requires a path")
     cfg_fields = {f.name for f in dataclasses.fields(CurateConfig)}
-    extra_keys = {"against", "lm_corpus", "embeddings", "eval_embeddings",
-                  "eval_corpus"}
+    side_input_keys = {"against", "lm_corpus", "embeddings", "eval_embeddings",
+                       "eval_corpus"}
     cur = recipe.get("curate", {})
-    unknown = set(cur) - cfg_fields - extra_keys
+    unknown = set(cur) - cfg_fields - side_input_keys
     if unknown:
         raise ValueError(f"unknown curate keys: {sorted(unknown)}")
     # embedding-space decontamination (r11): the gate needs BOTH side

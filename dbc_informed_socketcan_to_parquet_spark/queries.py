@@ -1030,7 +1030,6 @@ def q_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 from dbc_informed_socketcan_to_parquet_spark.operators.dedup import (  # noqa: E402
     embedding_near_dup_pairs,
     exact_duplicates,
-    lsh_candidate_pairs,
     minhash_perms,
     minhash_signatures,
     minhash_star_clusters,
@@ -1048,15 +1047,11 @@ from dbc_informed_socketcan_to_parquet_spark.operators.textops import (  # noqa:
     doc_fingerprints,
     doc_stats,
     lang_id,
-    repetition_stats,
 )
 from dbc_informed_socketcan_to_parquet_spark.operators.multimodal import (  # noqa: E402
     attach_media,
     extract_features,
 )
-
-# DuckDB rendering of functions/hashing.md5_long over a SQL expression
-_H = "CAST('0x' || substr(md5({expr}), 1, 15) AS BIGINT)"
 
 # char-shingle CTE: substr(lower(text),1,4096), n-grams at every position
 _SHINGLE_SQL = """

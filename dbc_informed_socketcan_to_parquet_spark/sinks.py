@@ -22,7 +22,6 @@ import io
 import os
 import socket
 import struct
-import urllib.request
 from typing import Callable
 
 from pyspark.sql import DataFrame
@@ -199,11 +198,3 @@ def influx_lines(df: DataFrame, measurement: str, time_col: str = "Time_ms", tag
         (F.col(time_col).cast("double") * 1_000_000).cast("long").cast("string"),  # ms → ns
     )
     return df.select(line.alias("line"))
-
-
-def influx_post(lines: list[str], url: str, token: str = "") -> None:
-    body = "\n".join(lines).encode()
-    req = urllib.request.Request(url, data=body, method="POST")
-    if token:
-        req.add_header("Authorization", f"Token {token}")
-    urllib.request.urlopen(req, timeout=30)

@@ -40,7 +40,6 @@ import re
 from typing import Iterator
 
 from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.datasource import (
     DataSource,

@@ -225,9 +225,8 @@ def test_ivf_auto_kernel_rule_and_default_plan(spark):
     assert plan.count("0.") < 8 * 64 // 2
 
 
-def test_frame_sample_plan_and_semi_join(spark, docs_df, tiny_spec):
+def test_frame_sample_plan_and_shingles(spark, docs_df):
     from dbc_informed_socketcan_to_parquet_spark.operators.multimodal import attach_media, frame_sample_plan
-    from dbc_informed_socketcan_to_parquet_spark.dbc.compiler import DecodeCompiler
     from dbc_informed_socketcan_to_parquet_spark.functions.text import char_shingles, word_shingles
 
     media = attach_media(docs_df)
@@ -236,13 +235,6 @@ def test_frame_sample_plan_and_semi_join(spark, docs_df, tiny_spec):
         assert r.sample_frames[0] == 0
         assert all(i % 10 == 0 for i in r.sample_frames)
         assert len(r.sample_frames) == (r.n_frames + 9) // 10
-
-    frames = spark.createDataFrame(
-        [(0x100, b"\0" * 8), (0x999, b"\0" * 8)], "can_id long, data binary"
-    )
-    comp = DecodeCompiler(tiny_spec)
-    kept = comp.known_id_semi_join(frames, spark).collect()
-    assert [r.can_id for r in kept] == [0x100]
 
     sh = spark.createDataFrame([("hello world spark",)], "t string").select(
         char_shingles(F.col("t"), 5).alias("c"), word_shingles(F.col("t"), 2).alias("w")

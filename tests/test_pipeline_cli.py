@@ -14,7 +14,7 @@ from dbc_informed_socketcan_to_parquet_spark.plans.pipeline import DecodePipelin
 from dbc_informed_socketcan_to_parquet_spark.sinks import arrow_ipc_bytes, influx_lines
 from dbc_informed_socketcan_to_parquet_spark.sources.parquet_reingest import migrate_legacy
 
-from tests.conftest import le_line
+from tests.conftest import TINY_DBC_TEXT, le_line
 
 
 @pytest.fixture(scope="module")
@@ -49,6 +49,33 @@ def test_batch_pipeline_cache_and_ffill(spark, tiny_spec, canlog, tmp_path):
             pytest.fail("null after forward-fill")
     # parquet written and readable
     assert spark.read.parquet(str(tmp_path / "out.parquet")).count() == len(rows)
+
+
+def test_cli_batch_counts_written_parquet(spark, canlog, tmp_path, monkeypatch, capsys):
+    """``wrote N rows`` is the written Parquet's row count, and the CLI does
+    not read the log again after the write: the log is deleted as soon as
+    ``run_batch`` returns, so re-running the pipeline to count would fail."""
+    import shutil
+
+    from dbc_informed_socketcan_to_parquet_spark.__main__ import main
+
+    dbc = tmp_path / "tiny.dbc"
+    dbc.write_text(TINY_DBC_TEXT)
+    log = tmp_path / "cap.log"
+    shutil.copy(canlog, log)
+    out = str(tmp_path / "out.parquet")
+    run_batch = DecodePipeline.run_batch
+
+    def run_then_delete_log(self, spark_):
+        df = run_batch(self, spark_)
+        log.unlink()
+        return df
+
+    monkeypatch.setattr(DecodePipeline, "run_batch", run_then_delete_log)
+    main([str(dbc), "--if", str(log), "--of", out, "--cache", "50", "--forward-fill"])
+    n = spark.read.parquet(out).count()
+    assert n > 0
+    assert capsys.readouterr().out.splitlines()[-1] == f"wrote {n} rows"
 
 
 def test_pipeline_no_adjust_timestamp(spark, tiny_spec, canlog):
