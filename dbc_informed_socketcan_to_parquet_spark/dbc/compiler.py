@@ -1,14 +1,22 @@
-"""DBC → Column-expression compiler (the engine's "physical decode codegen").
+"""DBC → SQL-text compiler (the engine's "physical decode codegen").
 
 Replaces the reference's per-frame interpretive decode loop
 (/root/reference/src/decoder.cpp:76-129) with driver-side expression
-generation: one Spark Column per signal, each a shift and mask on a
+generation: one Spark SQL expression per signal, each a shift and mask on a
 payload-word column that ``decode_wide`` computes once per frame in its own
 projection, so a 100-signal DBC decodes in one WholeStageCodegen stage with
 zero Python in the data path and a plan that grows linearly with DBC width.
 
+The expressions are SQL text, and ``decode_wide`` applies each projection
+with one ``selectExpr`` call: building the plan costs about one JVM call
+per output column, where Column algebra cost one JVM call (plus a Python
+call-site capture) per Column method — hundreds per signal.
+:meth:`DecodeCompiler.raw_expr`, :meth:`~DecodeCompiler.phys_expr` and
+:meth:`~DecodeCompiler.enum_expr` are ``F.expr`` of the same text, for
+one-off Column use.
+
 Scale notes (100 TB):
-- The known-id filter (T6) is an ``isin`` over a driver-side literal list —
+- The known-id filter (T6) is an ``IN`` over a driver-side literal list —
   pushed into the parquet/text scan by Catalyst.
 - Wide decode = a word projection plus N pure projections; no shuffle is
   introduced until the downsample aggregation.
@@ -25,12 +33,13 @@ from dbc_informed_socketcan_to_parquet_spark.dbc.spec import BOOL, DbcSpec, Mess
 from dbc_informed_socketcan_to_parquet_spark.functions.bitfield import (
     byteswap64,
     extract_bits,
-    ieee754_float32,
+    ieee754_float32_sql,
     motorola_lsb,
     payload_be_u64,
     payload_le_u64,
     sign_extend,
 )
+from dbc_informed_socketcan_to_parquet_spark.functions.sqltext import double, ident, string
 
 #: byte order -> column holding that payload word inside ``decode_wide``
 _WORD_COLS = {"big": "_word_be", "little": "_word_le"}
@@ -50,28 +59,32 @@ class DecodeCompiler:
 
     # -- signal-level ------------------------------------------------------
     #
-    # ``words`` maps byte order ("big" / "little") to a column that already
-    # holds that payload word; ``decode_wide`` passes references to its word
-    # projection.  Without it the word is built inline from the data column
-    # — the form for one-off expressions over plain frames.
+    # ``words`` maps byte order ("big" / "little") to the SQL text of a
+    # column that already holds that payload word; ``decode_wide`` passes
+    # references to its word projection.  Without it the word is built
+    # inline from the data column — the form for one-off expressions over
+    # plain frames.
 
-    def raw_expr(self, sig: SignalSpec, words: Mapping[str, Column] | None = None) -> Column:
+    def raw_sql(self, sig: SignalSpec, words: Mapping[str, str] | None = None) -> str:
         """Unsigned raw bit-field of one signal from the payload word."""
         little = sig.byte_order == "little"
         if words is not None:
             word = words[sig.byte_order]
         else:
-            data = F.col(self.data_col)
+            data = ident(self.data_col)
             word = payload_le_u64(data) if little else payload_be_u64(data)
         lsb = sig.start_bit if little else motorola_lsb(sig.start_bit, sig.bit_length)
         return extract_bits(word, lsb, sig.bit_length)
 
-    def phys_expr(
+    def raw_expr(self, sig: SignalSpec, words: Mapping[str, str] | None = None) -> Column:
+        return F.expr(self.raw_sql(sig, words))
+
+    def phys_sql(
         self,
         sig: SignalSpec,
         msg: MessageSpec | None = None,
-        words: Mapping[str, Column] | None = None,
-    ) -> Column:
+        words: Mapping[str, str] | None = None,
+    ) -> str:
         """Physical value: raw → (sign extend) → reinterpret/scale → cast.
 
         Mirrors dbcppp RawToPhys semantics (phys = raw * factor + offset,
@@ -86,51 +99,63 @@ class DecodeCompiler:
         compute a wasted field (cheap integer ops) and null out via
         ``x + NULL = NULL``.
         """
-        raw = self.raw_expr(sig, words)
+        raw = self.raw_sql(sig, words)
         if sig.is_float32:
-            num = ieee754_float32(raw)
+            num = ieee754_float32_sql(raw)
         else:
             signed = sign_extend(raw, sig.bit_length) if sig.is_signed else raw
             if sig.type_tag == BOOL or (sig.factor == 1.0 and sig.offset == 0.0):
                 num = signed
             else:
-                num = signed.cast("double") * F.lit(float(sig.factor)) + F.lit(float(sig.offset))
+                num = f"((CAST({signed} AS DOUBLE) * {double(sig.factor)}) + {double(sig.offset)})"
         # Gate on owning message id — a frame only carries its own signals
         # (scatter loop, /root/reference/src/decoder.cpp:92-116).
         if msg is not None:
-            gate = F.col(self.can_id_col) == F.lit(msg.can_id)
+            gate = self._id_gate(msg)
             # Multiplexed signal: additionally require the mux switch value
             # (T5, /root/reference/src/decoder.cpp:85-88).
             if sig.mux_switch_value is not None and msg.mux_switch is not None:
-                sw = self.raw_expr(msg.mux_switch, words)
-                gate = gate & (sw == F.lit(sig.mux_switch_value))
-            num = num + F.when(gate, F.lit(0))
-        value = (num != 0) if sig.type_tag == BOOL else num
-        return value.cast(sig.spark_type)
+                sw = self.raw_sql(msg.mux_switch, words)
+                gate = f"({gate} AND ({sw} = {sig.mux_switch_value}))"
+            num = f"({num} + CASE WHEN {gate} THEN 0 END)"
+        value = f"({num} != 0)" if sig.type_tag == BOOL else num
+        return f"CAST({value} AS {sig.spark_type.simpleString()})"
 
-    def enum_expr(self, sig: SignalSpec, msg: MessageSpec) -> Column:
+    def phys_expr(
+        self,
+        sig: SignalSpec,
+        msg: MessageSpec | None = None,
+        words: Mapping[str, str] | None = None,
+    ) -> Column:
+        return F.expr(self.phys_sql(sig, msg, words))
+
+    def enum_sql(self, sig: SignalSpec, msg: MessageSpec) -> str:
         """VAL_ value-table rendering: raw value → label string (falls back
         to the number as text for unmapped values).  A driver-side literal
         map compiled into element_at on a map literal — no join, no UDF."""
         table = self.spec.value_tables.get((msg.can_id, sig.name))
-        raw = self.raw_expr(sig)
+        raw = self.raw_sql(sig)
         signed = sign_extend(raw, sig.bit_length) if sig.is_signed else raw
         if not table:
-            return signed.cast("string")
-        mapping = F.create_map(
-            *[c for k, v in sorted(table.items()) for c in (F.lit(int(k)), F.lit(v))]
-        )
-        labeled = F.coalesce(F.element_at(mapping, signed.cast("int")), signed.cast("string"))
-        gate = F.col(self.can_id_col) == F.lit(msg.can_id)
-        return F.when(gate, labeled)
+            return f"CAST({signed} AS STRING)"
+        mapping = "map(" + ", ".join(f"{int(k)}, {string(v)}" for k, v in sorted(table.items())) + ")"
+        labeled = f"coalesce(element_at({mapping}, CAST({signed} AS INT)), CAST({signed} AS STRING))"
+        return f"CASE WHEN {self._id_gate(msg)} THEN {labeled} END"
+
+    def enum_expr(self, sig: SignalSpec, msg: MessageSpec) -> Column:
+        return F.expr(self.enum_sql(sig, msg))
+
+    def _id_gate(self, msg: MessageSpec) -> str:
+        return f"({ident(self.can_id_col)} = {msg.can_id})"
 
     # -- frame-level -------------------------------------------------------
 
     def known_id_filter(self, frames: DataFrame) -> DataFrame:
         """T6: drop frames whose id is not in the dictionary
         (/root/reference/src/decoder.cpp:77-79).  Literal ``isin`` —
-        Catalyst pushes it to the scan."""
-        return frames.filter(F.col(self.can_id_col).isin(self.spec.known_ids()))
+        Catalyst pushes it to the scan.  Written as a SQL ``IN`` list."""
+        ids = ", ".join(str(i) for i in self.spec.known_ids())
+        return frames.filter(f"{ident(self.can_id_col)} IN ({ids})" if ids else "FALSE")
 
     def decode_wide(
         self,
@@ -154,23 +179,23 @@ class DecodeCompiler:
         shift and mask on a column reference, so the plan holds one word
         subtree however wide the DBC is.  ``CollapseProject`` keeps the word
         projection because each word is referenced more than once and is
-        not a cheap expression.
+        not a cheap expression.  Each projection is one ``selectExpr``.
         """
         frames = self.known_id_filter(frames)
         passthrough = list(dict.fromkeys([*keep_cols, "ts", self.can_id_col]))
-        framed = frames.select(
-            *passthrough, payload_be_u64(F.col(self.data_col)).alias(_WORD_COLS["big"])
+        words = {order: ident(c) for order, c in _WORD_COLS.items()}
+        framed = frames.selectExpr(
+            *map(ident, passthrough),
+            f"{payload_be_u64(ident(self.data_col))} AS {words['big']}",
         )
-        words = {"big": F.col(_WORD_COLS["big"])}
         if any(
             s is not None and s.byte_order == "little"
             for m in self.spec.messages
             for s in (*m.signals, m.mux_switch)
         ):
-            framed = framed.select("*", byteswap64(words["big"]).alias(_WORD_COLS["little"]))
-            words["little"] = F.col(_WORD_COLS["little"])
-        cols: list[Column] = [F.col(c) for c in keep_cols]
-        cols.append((F.col("ts") * 1000.0).alias(time_col))
+            framed = framed.selectExpr("*", f"{byteswap64(words['big'])} AS {words['little']}")
+        cols = [ident(c) for c in keep_cols]
+        cols.append(f"(`ts` * {double(1000.0)}) AS {ident(time_col)}")
         for msg, sig in self.spec.all_signals():
-            cols.append(self.phys_expr(sig, msg, words).alias(sig.column_name))
-        return framed.select(*cols)
+            cols.append(f"{self.phys_sql(sig, msg, words)} AS {ident(sig.column_name)}")
+        return framed.selectExpr(*cols)

@@ -19,14 +19,17 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from dbc_informed_socketcan_to_parquet_spark.functions.sqltext import double
+
 
 def epoch_ms(ts: Column) -> Column:
     """Epoch milliseconds (floor) of a timestamp column, TZ-independent."""
     return F.floor(F.unix_micros(ts) / F.lit(1000)).cast("long")
 
 
-def bucket_ms(ts_ms: Column, width_ms: float) -> Column:
-    """Aligned tumbling-bucket start for an epoch-ms column.
+def bucket_ms(ts_ms: str, width_ms: float) -> str:
+    """Aligned tumbling-bucket start for an epoch-ms column, as SQL text
+    over the SQL text ``ts_ms``.
 
     The reference's buckets are stream-relative and drift by one message
     (event-driven close, /root/reference/src/main.cpp:110-131 — see
@@ -37,5 +40,6 @@ def bucket_ms(ts_ms: Column, width_ms: float) -> Column:
     """
     if float(width_ms) == int(width_ms):
         w = int(width_ms)
-        return (F.floor(ts_ms / F.lit(w)) * F.lit(w)).cast("long")
-    return F.floor(ts_ms / F.lit(float(width_ms))) * F.lit(float(width_ms))
+        return f"CAST((FLOOR(({ts_ms} / {w})) * {w}) AS BIGINT)"
+    w = double(width_ms)
+    return f"(FLOOR(({ts_ms} / {w})) * {w})"

@@ -14,6 +14,9 @@ groupBy, whose result depends on physical row order.  ``ord`` defaults to
 the time column; pass a sequence column (e.g. a line number) to break
 same-millisecond ties deterministically.
 
+The bucket key and every aggregate are SQL text, so building the
+aggregation costs about one JVM call per signal column.
+
 Scale: one hash aggregation = one shuffle on the bucket key, with map-side
 partial aggregation; no window, no sort.  Buckets are epoch-aligned
 (documented divergence from the reference's stream-relative drift —
@@ -22,16 +25,16 @@ SURVEY.md §2.3 A1) precisely so that the key is computable map-side.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dbc_informed_socketcan_to_parquet_spark.functions.sqltext import ident
 from dbc_informed_socketcan_to_parquet_spark.functions.timeutil import bucket_ms
 
 
-def _one_value(col: str, ord_col: Column, agg: str) -> Column:
-    fn = F.max_by if agg == "last" else F.min_by
-    guarded_ord = F.when(F.col(col).isNotNull(), ord_col)
-    return fn(F.col(col), guarded_ord).alias(col)
+def _one_value(col: str, ord_col: str, fn: str) -> str:
+    c = ident(col)
+    return f"{fn}({c}, CASE WHEN ({c} IS NOT NULL) THEN {ord_col} END) AS {c}"
 
 
 def bucket_downsample(
@@ -54,13 +57,13 @@ def bucket_downsample(
     if cache_ms is None or cache_ms <= 0:
         return wide
 
-    ord_col = F.col(order_col) if order_col else F.col(time_col)
     if agg not in ("last", "first"):
         raise ValueError(f"agg must be 'last' or 'first', got {agg!r}")
-
-    bucket = bucket_ms(F.col(time_col), cache_ms).alias(time_col)
-    aggs = [_one_value(c, ord_col, agg) for c in signal_cols if c != order_col]
-    return wide.groupBy(bucket).agg(*aggs)
+    fn = "max_by" if agg == "last" else "min_by"
+    ord_col = ident(order_col or time_col)
+    t = ident(time_col)
+    aggs = [F.expr(_one_value(c, ord_col, fn)) for c in signal_cols if c != order_col]
+    return wide.groupBy(F.expr(f"{bucket_ms(t, cache_ms)} AS {t}")).agg(*aggs)
 
 
 def rollup_cascade(

@@ -24,31 +24,41 @@ Two physical strategies:
 Each stage (fill, carry-out, carry-in, coalesce) is ONE projection or
 aggregate over all columns, so the plan grows linearly with the number of
 columns; a ``withColumn`` per column would re-analyse the whole plan once
-per column.
+per column.  Every expression is SQL text, so a stage costs about one JVM
+call per column to build.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from dbc_informed_socketcan_to_parquet_spark.functions.sqltext import double, ident
 
 #: ``forward_fill_blocks`` block width when the caller names none, in
 #: ``order_col`` units — one minute for the engine's millisecond axis.
 DEFAULT_BLOCK_WIDTH = 60_000.0
 
+_TO_HERE = "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
 
-def _replace(df: DataFrame, exprs: dict[str, Column], out_cols: list[str]) -> DataFrame:
-    """One ``select`` of ``out_cols`` in order, each taken from ``exprs``
-    when present, else passed through."""
-    return df.select(*[exprs[c].alias(c) if c in exprs else c for c in out_cols])
+
+def _replace(df: DataFrame, exprs: dict[str, str], out_cols: list[str]) -> DataFrame:
+    """One ``selectExpr`` of ``out_cols`` in order, each taken from the SQL
+    text in ``exprs`` when present, else passed through."""
+    return df.selectExpr(*[f"{exprs[c]} AS {ident(c)}" if c in exprs else ident(c) for c in out_cols])
+
+
+def _locf(c: str, window: str) -> str:
+    """Last non-null value of column ``c`` over the SQL window spec."""
+    return f"last({ident(c)}, true) OVER ({window})"
 
 
 def forward_fill(df: DataFrame, order_col: str, cols: list[str] | None = None) -> DataFrame:
     """LOCF over ``order_col``."""
     if cols is None:
         cols = [c for c in df.columns if c != order_col]
-    w = Window.orderBy(order_col).rowsBetween(Window.unboundedPreceding, 0)
-    return _replace(df, {c: F.last(c, ignorenulls=True).over(w) for c in cols}, df.columns)
+    w = f"ORDER BY {ident(order_col)} {_TO_HERE}"
+    return _replace(df, {c: _locf(c, w) for c in cols}, df.columns)
 
 
 def forward_fill_blocks(
@@ -69,7 +79,8 @@ def forward_fill_blocks(
     width = DEFAULT_BLOCK_WIDTH if block_width is None else float(block_width)
     if width <= 0:
         raise ValueError(f"block_width must be positive, got {block_width!r}")
-    blocked = df.withColumn("_blk", F.floor(F.col(order_col) / F.lit(width)).cast("long"))
+    order = ident(order_col)
+    blocked = df.withColumn("_blk", F.expr(f"CAST(FLOOR(({order} / {double(width)})) AS BIGINT)"))
 
     # Both consumers below (the within-block fill window and the carry-out
     # aggregate) need the data clustered by _blk.  Establish that with ONE
@@ -82,26 +93,24 @@ def forward_fill_blocks(
     blocked = blocked.repartition("_blk")
 
     # Pass 1: fill within each block (block-local sort, fully parallel).
-    w_in = Window.partitionBy("_blk").orderBy(order_col).rowsBetween(Window.unboundedPreceding, 0)
-    filled = _replace(
-        blocked, {c: F.last(c, ignorenulls=True).over(w_in) for c in cols}, blocked.columns
-    )
+    w_in = f"PARTITION BY `_blk` ORDER BY {order} {_TO_HERE}"
+    filled = _replace(blocked, {c: _locf(c, w_in) for c in cols}, blocked.columns)
 
     # Pass 2: per-block carry-out = value at the max ord where c is non-null.
     carry_out = blocked.groupBy("_blk").agg(
         *[
-            F.max_by(F.col(c), F.when(F.col(c).isNotNull(), F.col(order_col))).alias(c)
+            F.expr(f"max_by({ident(c)}, CASE WHEN ({ident(c)} IS NOT NULL) THEN {order} END) AS {ident(c)}")
             for c in cols
         ]
     )
     # Prefix-fill carries across blocks: the block table is tiny (≈ number
     # of partitions), so a single-task window here is free.
-    w_blk = Window.orderBy("_blk").rowsBetween(Window.unboundedPreceding, -1)
-    carry_in = carry_out.select(
-        "_blk", *[F.last(c, ignorenulls=True).over(w_blk).alias(f"_carry_{c}") for c in cols]
+    w_blk = "ORDER BY `_blk` ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING"
+    carry_in = carry_out.selectExpr(
+        "`_blk`", *[f"{_locf(c, w_blk)} AS {ident('_carry_' + c)}" for c in cols]
     )
 
     out = filled.join(F.broadcast(carry_in), "_blk", "left")
     return _replace(
-        out, {c: F.coalesce(F.col(c), F.col(f"_carry_{c}")) for c in cols}, df.columns
+        out, {c: f"coalesce({ident(c)}, {ident('_carry_' + c)})" for c in cols}, df.columns
     )

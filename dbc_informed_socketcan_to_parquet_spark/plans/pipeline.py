@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from dbc_informed_socketcan_to_parquet_spark.dbc.compiler import DecodeCompiler
 from dbc_informed_socketcan_to_parquet_spark.dbc.parser import parse_dbc
 from dbc_informed_socketcan_to_parquet_spark.dbc.spec import DbcSpec
+from dbc_informed_socketcan_to_parquet_spark.functions.sqltext import ident
 from dbc_informed_socketcan_to_parquet_spark.operators.bucket import bucket_downsample
 from dbc_informed_socketcan_to_parquet_spark.operators.ffill import forward_fill_blocks
 from dbc_informed_socketcan_to_parquet_spark.sinks import console_sink, write_parquet
@@ -90,11 +91,11 @@ class DecodePipeline:
             sig_cols = [s.column_name for _, s in self.spec.all_signals()]
             out = bucket_downsample(out, cfg.cache_ms, signal_cols=sig_cols, agg=cfg.agg)
             did_downsample = cfg.cache_ms > 0
+        present = set(out.columns)
+        sig_cols = [s.column_name for _, s in self.spec.all_signals() if s.column_name in present]
         if cfg.forward_fill:
-            sig_cols = [s.column_name for _, s in self.spec.all_signals() if s.column_name in out.columns]
             out = forward_fill_blocks(out, "Time_ms", sig_cols)
-        ordered = ["Time_ms"] + [s.column_name for _, s in self.spec.all_signals() if s.column_name in out.columns]
-        out = out.select(*ordered)
+        out = out.selectExpr(*map(ident, ["Time_ms", *sig_cols]))
         # Ordering: post-downsample output is small (one row per bucket) —
         # a total order is cheap and matches the reference file layout.  On
         # the default row-per-frame path (cache 0) a global sort of every

@@ -151,7 +151,9 @@ class MinimalWebSocketClient:
             header += struct.pack(">Q", n)
         mask = os.urandom(4)
         header += mask
-        masked = bytes(b ^ mask[i % 4] for i, b in enumerate(payload))
+        # one big-integer XOR against the key repeated to the payload length
+        key = (mask * (n // 4 + 1))[:n]
+        masked = (int.from_bytes(payload, "big") ^ int.from_bytes(key, "big")).to_bytes(n, "big")
         self.sock.sendall(bytes(header) + masked)
 
     def close(self) -> None:

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dbc_informed_socketcan_to_parquet_spark.functions.candump import parse_candump_lines
+from dbc_informed_socketcan_to_parquet_spark.functions.sqltext import double, ident
 
 
 def read_candump(spark: SparkSession, path: str, adjust_timestamp: bool = True) -> DataFrame:
@@ -49,16 +50,17 @@ def normalize_time(frames: DataFrame, mode: str = "min", time_col: str = "ts") -
     from ``min(ts)`` whenever the log is not time-sorted, so switching
     would change the output.  Left as is.
     """
+    t = ident(time_col)
     if mode == "none":
-        return frames.withColumn("Time_ms", F.col(time_col) * 1000.0)
+        return frames.withColumn("Time_ms", F.expr(f"({t} * {double(1000.0)})"))
     if mode == "min":
         # lazy broadcast scalar: the 1-row min aggregate joins in as a
         # broadcast stage of the SAME action — no eager .first() pass on
         # the driver before the decode job is even built
-        t0 = frames.agg(F.min(time_col).alias("_t0"))
+        t0 = frames.agg(F.expr(f"min({t}) AS `_t0`"))
         return (
             frames.crossJoin(F.broadcast(t0))
-            .withColumn("Time_ms", (F.col(time_col) - F.col("_t0")) * 1000.0)
+            .withColumn("Time_ms", F.expr(f"(({t} - `_t0`) * {double(1000.0)})"))
             .drop("_t0")
         )
     raise ValueError(f"unknown normalize mode {mode!r}")

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dbc_informed_socketcan_to_parquet_spark.dbc.compiler import DecodeCompiler
+from dbc_informed_socketcan_to_parquet_spark.functions.sqltext import ident
 from dbc_informed_socketcan_to_parquet_spark.sinks import stream_console_sink, stream_parquet_sink
 from dbc_informed_socketcan_to_parquet_spark.sources.candump import stream_candump_dir, stream_candump_socket
 
@@ -73,19 +74,18 @@ def streaming_bucket_downsample(
     win_ms = max(int(cache_ms), 1)
 
     def pick_last(c: str):
-        nn = F.when(
-            F.col(c).isNotNull(),
-            F.struct(F.col("event_time").alias("t"), F.col(c).alias("v")),
+        q = ident(c)
+        return F.expr(
+            f"max(CASE WHEN ({q} IS NOT NULL) THEN struct(`event_time` AS t, {q} AS v) END).v AS {q}"
         )
-        return F.max(nn).getField("v").alias(c)
 
     agged = (
         wide.withWatermark("event_time", watermark)
         .groupBy(F.window("event_time", f"{win_ms} milliseconds").alias("w"))
         .agg(*[pick_last(c) for c in signal_cols])
     )
-    return agged.select(
-        (F.unix_micros(F.col("w.start")) / 1000).cast("double").alias("Time_ms"), *signal_cols
+    return agged.selectExpr(
+        "CAST((unix_micros(`w`.`start`) / 1000) AS DOUBLE) AS `Time_ms`", *map(ident, signal_cols)
     )
 
 

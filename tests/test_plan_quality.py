@@ -153,6 +153,102 @@ def test_run_batch_cache_ffill_scans_log_twice(spark, tiny_spec, tmp_path):
     assert final.count("FileScan text") == 2
 
 
+def _plan_build_commands(spark, spec, log, monkeypatch) -> int:
+    """py4j commands sent while building (not running) the
+    ``--cache 10 --forward-fill`` ``run_batch`` plan.  py4j's ``m``
+    commands are skipped: they are garbage-collection detaches and arrive
+    whenever Python's GC runs."""
+    from py4j import clientserver, protocol
+
+    from dbc_informed_socketcan_to_parquet_spark.plans.pipeline import (
+        DecodePipeline,
+        PipelineConfig,
+    )
+
+    sent = [0]
+    send = clientserver.ClientServerConnection.send_command
+
+    def counting(self, command, *args, **kwargs):
+        if not command.startswith(protocol.MEMORY_COMMAND_NAME):
+            sent[0] += 1
+        return send(self, command, *args, **kwargs)
+
+    cfg = PipelineConfig(input_path=str(log), cache_ms=10, forward_fill=True)
+    with monkeypatch.context() as m:
+        m.setattr(clientserver.ClientServerConnection, "send_command", counting)
+        DecodePipeline(cfg, spec=spec).run_batch(spark)
+    return sent[0]
+
+
+def test_run_batch_plan_build_commands_per_signal(spark, tmp_path, monkeypatch):
+    """Building the CAN spine's plan costs about one JVM call per output
+    column per stage: every stage is SQL text applied in one call, not a
+    Column method (one JVM round trip each, plus a Python call-site
+    capture when DataFrame debugging is on) per operator per signal.  The
+    Column-algebra spine cost ~350 commands per added signal."""
+    from tests.conftest import le_line, wide_spec
+
+    log = tmp_path / "cap.log"
+    log.write_text(le_line(1700000000.0, 0x200, 0x0102030405060708) + "\n")
+    _plan_build_commands(spark, wide_spec(2), log, monkeypatch)   # warm-up
+    n16 = _plan_build_commands(spark, wide_spec(2), log, monkeypatch)
+    n64 = _plan_build_commands(spark, wide_spec(8), log, monkeypatch)
+    assert n16 > 0
+    assert (n64 - n16) / 48 <= 16, (n16, n64)
+
+
+def test_spine_literals_are_never_decimal(spark, tmp_path):
+    """A bare ``0.5`` in Spark SQL is a DECIMAL literal.  The SQL-text
+    decode and forward-fill must write doubles as doubles: no DecimalType
+    anywhere in their analyzed plans."""
+    from tests.conftest import le_line, wide_spec
+
+    from dbc_informed_socketcan_to_parquet_spark.functions.candump import parse_candump_lines
+    from dbc_informed_socketcan_to_parquet_spark.operators.ffill import forward_fill_blocks
+
+    log = tmp_path / "cap.log"
+    log.write_text(le_line(1700000000.0, 0x200, 0x0102030405060708) + "\n")
+    spec = wide_spec(8)
+    wide = DecodeCompiler(spec).decode_wide(parse_candump_lines(spark.read.text(str(log))))
+    filled = forward_fill_blocks(wide, "Time_ms", [s.column_name for _, s in spec.all_signals()])
+    for df in (wide, filled):
+        analyzed = df._jdf.queryExecution().analyzed().toJSON()
+        assert "decimal" not in analyzed.lower()
+
+
+def test_phys_expr_doubles_unchanged(spark):
+    """``phys_expr`` yields the values of double arithmetic: a scaled
+    signal, a signed scaled signal and a float32 reinterpret (normal and
+    subnormal) decode to exactly the doubles Python computes."""
+    import struct
+
+    from dbc_informed_socketcan_to_parquet_spark.dbc.spec import DbcSpec, MessageSpec, SignalSpec
+
+    scaled = SignalSpec("Scaled", 0, 32, "little", False, 0.1, -40.3)
+    signed = SignalSpec("Signed", 32, 32, "little", True, 0.25, 0.1)
+    f32 = SignalSpec("flt32_F", 0, 32, "little", False, 1.0, 0.0)
+    mix = MessageSpec(0x300, "MIX", 8, (scaled, signed))
+    flt = MessageSpec(0x301, "FLT", 8, (f32,))
+    comp = DecodeCompiler(DbcSpec(messages=(mix, flt)))
+    raws = [(3, -1), (7, -128), (4095, 5)]
+    floats = [3.3, -1.5e-40, 65504.0]          # the middle one is subnormal
+    f32_of = [struct.unpack("<f", struct.pack("<f", x))[0] for x in floats]
+    frames = spark.createDataFrame(
+        [(0x300, struct.pack("<Ii", s, g)) for s, g in raws]
+        + [(0x301, struct.pack("<fI", x, 0)) for x in floats],
+        "can_id long, data binary",
+    )
+    got = frames.select(
+        comp.phys_expr(scaled, mix).alias("Scaled"),
+        comp.phys_expr(signed, mix).alias("Signed"),
+        comp.phys_expr(f32, flt).alias("F"),
+    ).collect()
+    assert [(r.Scaled, r.Signed) for r in got[:3]] == [
+        (s * 0.1 + -40.3, g * 0.25 + 0.1) for s, g in raws
+    ]
+    assert [r.F for r in got[3:]] == f32_of
+
+
 def test_q5_supplier_join_not_hint_broadcast(spark):
     """Q5's nation/region joins stay explicitly broadcast (fixed 25/5-row
     dims), but the supplier join must carry NO broadcast hint: supplier

@@ -12,22 +12,28 @@ import threading
 
 import pyarrow as pa
 
-from dbc_informed_socketcan_to_parquet_spark.sinks import websocket_ipc_sink
+from dbc_informed_socketcan_to_parquet_spark.sinks import MinimalWebSocketClient, websocket_ipc_sink
 
 _GUID = "258EAFA5-E914-47DA-95CA-C5AB0DC85B11"
 
 
 class _MiniServer(threading.Thread):
-    """Accept one WS client, complete the handshake, read one binary frame."""
+    """Accept one WS client, complete the handshake, read ``frames``
+    binary frames."""
 
-    def __init__(self):
+    def __init__(self, frames: int = 1):
         super().__init__(daemon=True)
         self.sock = socket.socket()
         self.sock.bind(("127.0.0.1", 0))
         self.sock.listen(1)
         self.port = self.sock.getsockname()[1]
-        self.payload: bytes | None = None
+        self.frames = frames
+        self.payloads: list[bytes] = []
         self.ready = threading.Event()
+
+    @property
+    def payload(self) -> bytes | None:
+        return self.payloads[0] if self.payloads else None
 
     def run(self):
         conn, _ = self.sock.accept()
@@ -49,15 +55,16 @@ class _MiniServer(threading.Thread):
                 buf += conn.recv(n - len(buf))
             return buf
 
-        hdr = read_exact(2)
-        ln = hdr[1] & 0x7F
-        if ln == 126:
-            ln = struct.unpack(">H", read_exact(2))[0]
-        elif ln == 127:
-            ln = struct.unpack(">Q", read_exact(8))[0]
-        mask = read_exact(4)
-        data = read_exact(ln)
-        self.payload = bytes(b ^ mask[i % 4] for i, b in enumerate(data))
+        for _ in range(self.frames):
+            hdr = read_exact(2)
+            ln = hdr[1] & 0x7F
+            if ln == 126:
+                ln = struct.unpack(">H", read_exact(2))[0]
+            elif ln == 127:
+                ln = struct.unpack(">Q", read_exact(8))[0]
+            mask = read_exact(4)
+            data = read_exact(ln)
+            self.payloads.append(bytes(b ^ mask[i % 4] for i, b in enumerate(data)))
         conn.close()
         self.ready.set()
 
@@ -74,3 +81,18 @@ def test_websocket_sink_delivers_arrow_ipc(spark):
     assert table.column_names == ["Time_ms", "EngSpeed"]
     assert table.num_rows == 2
     assert table.column("EngSpeed").to_pylist() == [400.0, 401.5]
+
+
+def test_websocket_client_masks_every_length_header():
+    """Payloads on both sides of the 7-bit, 16-bit and 64-bit length
+    headers (RFC 6455 §5.2) arrive unmasked byte for byte."""
+    sizes = [0, 125, 126, 65_535, 65_536]
+    server = _MiniServer(frames=len(sizes))
+    server.start()
+    client = MinimalWebSocketClient("127.0.0.1", server.port)
+    sent = [bytes((7 * i + n) % 256 for i in range(n)) for n in sizes]
+    for payload in sent:
+        client.send_binary(payload)
+    assert server.ready.wait(timeout=15), "server never received every frame"
+    client.close()
+    assert server.payloads == sent
