@@ -29,7 +29,8 @@ changes.  (The cleaner flag is read by the ContextCleaner at app start
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import functions as F
 
 _CLEAN_CHECKPOINTS_CONF = "spark.cleaner.referenceTracking.cleanCheckpoints"
 
@@ -82,3 +83,19 @@ def durable_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     finally:
         df.unpersist()
     return out
+
+
+def counted_checkpoint(df: DataFrame, *aggs: Column) -> tuple[DataFrame, tuple]:
+    """Eager :func:`durable_checkpoint` of ``df`` and the values of the
+    aggregates ``aggs`` over its rows, in order (default: the row count),
+    observed on the checkpoint's own job, so no count job runs.  A lazy
+    checkpoint executes nothing and would leave the observation at 0 rows.
+
+    Spark Connect's checkpoint command does not return observed metrics
+    (its ``Observation`` stays empty); there the aggregates run as one
+    job on the checkpointed frame."""
+    aggs = aggs or (F.count(F.lit(1)).alias("n"),)
+    seen = Observation()
+    out = durable_checkpoint(df.observe(seen, *aggs), eager=True)
+    got = seen.get
+    return out, tuple(got.values()) if got else tuple(out.agg(*aggs).first())

@@ -28,7 +28,7 @@ import random
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from dbc_informed_socketcan_to_parquet_spark.functions.checkpoints import durable_checkpoint
+from dbc_informed_socketcan_to_parquet_spark.functions.checkpoints import counted_checkpoint, durable_checkpoint
 from dbc_informed_socketcan_to_parquet_spark.functions.hashing import md5_long, perm_hash
 from dbc_informed_socketcan_to_parquet_spark.functions.partitioning import fan_out
 
@@ -48,11 +48,11 @@ HOT_SET_BROADCAST_MAX_ROWS = 2_000_000
 
 
 def _measured_small(df: DataFrame, max_rows: int) -> tuple[DataFrame, bool]:
-    """Materialize ``df`` once and measure its row count (the aggregation
-    that produces it is required anyway; materializing makes the join
-    below reuse the result instead of recomputing the corpus pass).
-    Returns the materialized frame and whether it is small enough to
-    broadcast.
+    """Materialize ``df`` once and read its row count from that same job
+    (``counted_checkpoint``: no count job).  The aggregation that produces
+    it is required anyway; materializing makes the join below reuse the
+    result instead of recomputing the corpus pass.  Returns the
+    materialized frame and whether it is small enough to broadcast.
 
     ``durable_checkpoint`` rather than ``persist``: a persist registers
     a CacheManager entry that lives until an explicit unpersist — which
@@ -62,8 +62,8 @@ def _measured_small(df: DataFrame, max_rows: int) -> tuple[DataFrame, bool]:
     RDD and released by the ContextCleaner once the plan is
     garbage-collected; with a configured checkpoint dir the blocks are
     additionally executor-loss-safe (see functions/checkpoints.py)."""
-    df = durable_checkpoint(df, eager=True)
-    return df, df.count() <= max_rows
+    df, (n,) = counted_checkpoint(df)
+    return df, n <= max_rows
 
 
 def _keyed_join(left: DataFrame, right: DataFrame, key: str, small: bool,
@@ -738,10 +738,11 @@ def dedup_clusters(
 
     Scale: each round is two shuffle joins (labels ⋈ symmetric edges,
     labels ⋈ labels) + one min-groupBy, all decomposable; the
-    driver-side loop runs O(log diameter) rounds with one scalar count
-    per round for convergence — no per-row driver work.  Isolated nodes
-    (docs in no pair) are not in the output; keep_canonical treats
-    absent as its own singleton.
+    driver-side loop runs O(log diameter) rounds and reads each round's
+    convergence scalar from that round's checkpoint job
+    (``counted_checkpoint``) — no per-row driver work and no probe job.
+    Isolated nodes (docs in no pair) are not in the output;
+    keep_canonical treats absent as its own singleton.
 
     HYBRID (r6): after dedup/LSH the edge list is orders of magnitude
     smaller than the corpus, and below ``driver_threshold`` edges (1M ≈
@@ -749,9 +750,10 @@ def dedup_clusters(
     the components compute in one union-find pass on the driver instead
     of O(log d) rounds of double shuffle joins: identical (doc_id,
     cluster_id) output by construction (pytest-pinned against the
-    distributed loop), ~5 Spark jobs saved per call.  Above the
-    threshold — the genuine 100 TB regime — the distributed loop runs
-    unchanged.  ``driver_threshold=0`` forces the loop.
+    distributed loop); the exact edge count that picks the path is
+    observed on the edge checkpoint's job.  Above the threshold — the
+    genuine 100 TB regime — the distributed loop runs unchanged.
+    ``driver_threshold=0`` forces the loop.
     """
     # symmetric edge list: propagation must flow both directions.
     # Checkpoint it ONCE — it is re-joined every round, and without the
@@ -763,9 +765,9 @@ def dedup_clusters(
     edges = e.union(
         pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
     ).distinct()
-    edges = durable_checkpoint(edges, eager=True)
+    edges, (n_edges,) = counted_checkpoint(edges)
 
-    if driver_threshold > 0 and edges.count() <= driver_threshold:
+    if driver_threshold > 0 and n_edges <= driver_threshold:
         return _cc_driver(edges)
 
     labels = (
@@ -775,16 +777,15 @@ def dedup_clusters(
     )
     # Convergence probe: labels are node ids and every update takes a
     # MIN, so the label vector is componentwise non-increasing — the
-    # label SUM strictly decreases iff any label changed.  One aggregate
-    # on the already-checkpointed frame replaces the old join+count.
-    def _label_sum(frame: DataFrame) -> int:
-        # sum() over zero rows is NULL — an EMPTY pair graph (nothing
-        # collided, e.g. a tiny or fully-distinct corpus) must converge
-        # immediately, not crash
-        total = frame.agg(F.sum(F.col("cluster_id").cast("decimal(38,0)"))).collect()[0][0]
-        return int(total) if total is not None else 0
+    # label SUM strictly decreases iff any label changed.  Each round's
+    # checkpoint counts its label sum and its id sum (one row per
+    # node, so the id sum is the starting label sum).  sum() over zero
+    # rows is NULL: an EMPTY pair graph (nothing collided, e.g. a tiny or
+    # fully-distinct corpus) must converge at once, not crash.
+    def _sum(c: str) -> Column:
+        return F.coalesce(F.sum(F.col(c).cast("decimal(38,0)")), F.lit(0)).alias(c)
 
-    prev_sum = _label_sum(labels)
+    prev_sum = None
     changed = 0
     for _ in range(max_iters):
         # min over each node's neighborhood labels, then min with own
@@ -816,9 +817,12 @@ def dedup_clusters(
                 F.coalesce("_lmin", "cluster_id").alias("cluster_id"),
             )
         )
-        new_labels = durable_checkpoint(new_labels, eager=True)  # cut the per-round lineage
-        new_sum = _label_sum(new_labels)
-        changed = prev_sum - new_sum
+        new_labels, (new_sum, id_sum) = counted_checkpoint(  # cut the per-round lineage
+            new_labels, _sum("cluster_id"), _sum("id")
+        )
+        if prev_sum is None:
+            prev_sum = id_sum
+        changed = int(prev_sum - new_sum)
         prev_sum = new_sum
         labels = new_labels
         if changed == 0:

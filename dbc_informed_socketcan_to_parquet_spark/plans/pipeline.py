@@ -95,7 +95,9 @@ class DecodePipeline:
         sig_cols = [s.column_name for _, s in self.spec.all_signals() if s.column_name in present]
         if cfg.forward_fill:
             out = forward_fill_blocks(out, "Time_ms", sig_cols)
-        out = out.selectExpr(*map(ident, ["Time_ms", *sig_cols]))
+        # Time_ms is DOUBLE on every path, as in the reference's output
+        # table; a whole-ms --cache buckets it as BIGINT
+        out = out.selectExpr("CAST(`Time_ms` AS DOUBLE) AS `Time_ms`", *map(ident, sig_cols))
         # Ordering: post-downsample output is small (one row per bucket) —
         # a total order is cheap and matches the reference file layout.  On
         # the default row-per-frame path (cache 0) a global sort of every
@@ -128,22 +130,24 @@ def decode_audit(
     ``operators/curate.curate_audit``.
 
     Returns ``(stage_idx, stage, rows_in, rows_out, dropped)`` for the
-    two drop-capable stages (``parse``, ``known_id``).  Each boundary is
-    a lazy localCheckpoint, so the chain computes once across the two
-    counts; the funnel itself is a driver-built 2-row frame.
+    two drop-capable stages (``parse``, ``known_id``).  The three counts
+    are observations on one ``noop`` write of the chain, so the audit
+    runs the chain once, as one Spark job; the funnel itself is a
+    driver-built 2-row frame.
     """
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     from dbc_informed_socketcan_to_parquet_spark.functions.candump import (
         parse_candump_lines,
     )
 
-    n_lines = lines.count()
-    frames = parse_candump_lines(lines, value_col, keep_malformed=False)
-    frames = frames.localCheckpoint(eager=False)
-    n_parsed = frames.count()
-    known = DecodeCompiler(spec).known_id_filter(frames)
-    n_known = known.count()
+    seen = [Observation() for _ in range(3)]
+    n = F.count(F.lit(1)).alias("n")
+    frames = parse_candump_lines(lines.observe(seen[0], n), value_col, keep_malformed=False)
+    known = DecodeCompiler(spec).known_id_filter(frames.observe(seen[1], n))
+    known.observe(seen[2], n).write.format("noop").mode("overwrite").save()
+    n_lines, n_parsed, n_known = (o.get["n"] for o in seen)
     return lines.sparkSession.createDataFrame(
         [
             (1, "parse", n_lines, n_parsed, n_lines - n_parsed),

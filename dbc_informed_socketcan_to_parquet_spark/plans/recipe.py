@@ -821,7 +821,7 @@ def _update_history_stores(
     so re-running after a mid-update crash is idempotent — the resume
     marker records completion, the anti-joins make repetition safe."""
     from dbc_informed_socketcan_to_parquet_spark.functions.checkpoints import (
-        durable_checkpoint,
+        counted_checkpoint,
     )
     from dbc_informed_socketcan_to_parquet_spark.operators.curate import (
         _stage_complete,
@@ -841,8 +841,7 @@ def _update_history_stores(
         if _stage_complete(hist["digests"]):
             old = spark.read.parquet(hist["digests"])
             dig = dig.join(old, "content_hash", "left_anti")
-        dig = durable_checkpoint(dig, eager=True)
-        n = dig.count()
+        dig, (n,) = counted_checkpoint(dig)
         if n:
             dig.write.mode("append").parquet(hist["digests"])
         out["digests_appended"] = n
@@ -855,8 +854,7 @@ def _update_history_stores(
                 shingle_n=meta["shingle_n"], seed=meta["seed"])
             sigs = sigs.join(store_sigs.select("doc_id"), "doc_id",
                              "left_anti")
-            sigs = durable_checkpoint(sigs, eager=True)
-            n = sigs.count()
+            sigs, (n,) = counted_checkpoint(sigs)
             if n:
                 minhash_write(sigs, path, meta["num_perms"],
                               meta["shingle_n"], seed=meta["seed"],
@@ -868,8 +866,7 @@ def _update_history_stores(
             sigs = minhash_signatures(kept, "doc_id", "text",
                                       num_perms=num_perms,
                                       shingle_n=shingle_n)
-            sigs = durable_checkpoint(sigs, eager=True)
-            n = sigs.count()
+            sigs, (n,) = counted_checkpoint(sigs)
             minhash_write(sigs, path, num_perms, shingle_n)
         out["sigs_appended"] = n
     if hist.get("embeddings_index"):
@@ -910,15 +907,13 @@ def _update_history_stores(
                         "the version pointer, or drop auto_rebuild")
             old_ids = spark.read.parquet(f"{idx}/data").select("vec_id")
             surv = surv.join(old_ids, "vec_id", "left_anti")
-            surv = durable_checkpoint(surv, eager=True)
-            n = surv.count()
+            surv, (n,) = counted_checkpoint(surv)
             if n:
                 ivf_index_append(spark, idx, surv)
         else:
             k0 = int(hist.get("num_clusters", 16))
             idx = os.path.join(root, "v0001") if auto else root
-            surv = durable_checkpoint(surv, eager=True)
-            n = surv.count()
+            surv, (n,) = counted_checkpoint(surv)
             if n:
                 if hist.get("sq8"):
                     # scalar-quantized layout (r15): 8x smaller,

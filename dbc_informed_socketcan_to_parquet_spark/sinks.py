@@ -47,7 +47,7 @@ def write_parquet(
     w.parquet(path)
 
 
-def stream_parquet_sink(df: DataFrame, path: str, checkpoint: str, trigger_seconds: int = 5):
+def stream_parquet_sink(df: DataFrame, path: str, checkpoint: str):
     """K1 streaming flavor — checkpointed, exactly-once file sink (the
     reference has no fault tolerance at all: a crash loses the open row
     group and the unclosed footer, /root/reference/src/main.cpp:60-61)."""
@@ -55,7 +55,7 @@ def stream_parquet_sink(df: DataFrame, path: str, checkpoint: str, trigger_secon
         df.writeStream.format("parquet")
         .option("path", path)
         .option("checkpointLocation", checkpoint)
-        .trigger(processingTime=f"{trigger_seconds} seconds")
+        .trigger(processingTime="5 seconds")
         .start()
     )
 

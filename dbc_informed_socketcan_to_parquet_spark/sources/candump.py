@@ -85,15 +85,13 @@ def stream_candump_dir(
 
 
 def stream_candump_socket(
-    spark: SparkSession, host: str = "localhost", port: int = 9000,
-    observe_funnel: bool = False,
+    spark: SparkSession, host: str = "localhost", port: int = 9000
 ) -> DataFrame:
     """S3 as a stream: candump lines over a TCP socket (the ``nc`` path).
 
-    Event time comes from the line's own epoch field when present; a
-    processing-time column is attached for sources that do not timestamp
-    (the reference's "shitty system timestamp",
-    /root/reference/src/main.cpp.bak:200, becomes ``current_timestamp()``).
+    Event time comes from the line's own epoch field, never from arrival
+    (the reference stamps frames with the system clock on receipt,
+    ``main.cpp.bak:200``).
     """
     lines = (
         spark.readStream.format("socket")
@@ -101,9 +99,4 @@ def stream_candump_socket(
         .option("port", port)
         .load()
     )
-    if observe_funnel:
-        lines = lines.observe("funnel_lines", F.count(F.lit(1)).alias("rows"))
-    frames = parse_candump_lines(lines).withColumn("proc_time", F.current_timestamp())
-    if observe_funnel:
-        frames = frames.observe("funnel_parse", F.count(F.lit(1)).alias("rows"))
-    return frames
+    return parse_candump_lines(lines)

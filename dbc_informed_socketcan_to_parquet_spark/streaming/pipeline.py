@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from dbc_informed_socketcan_to_parquet_spark.dbc.compiler import DecodeCompiler
 from dbc_informed_socketcan_to_parquet_spark.functions.sqltext import ident
 from dbc_informed_socketcan_to_parquet_spark.sinks import stream_console_sink, stream_parquet_sink
-from dbc_informed_socketcan_to_parquet_spark.sources.candump import stream_candump_dir, stream_candump_socket
+from dbc_informed_socketcan_to_parquet_spark.sources.candump import stream_candump_socket
 
 
 #: observe() metric names for the decode lane, pipeline order —
@@ -38,12 +38,13 @@ DECODE_FUNNEL_ORDER = ("funnel_lines", "funnel_parse", "funnel_known_id")
 
 
 def decode_stream_funnel(query) -> list[dict]:
-    """Drop funnel for a live decode stream started with
-    ``observe_funnel=True`` — the streaming twin of
-    ``plans/pipeline.decode_audit``: per-micro-batch CollectMetrics on
-    the one plan count the malformed-line and unknown-id losses the
-    reference discards silently.  Same folding (and the same bounded
-    ``recentProgress`` window caveat) as
+    """Drop funnel for a decode stream read with
+    ``sources.candump.stream_candump_dir(observe_funnel=True)``, whose
+    known-id survivors the caller observes as ``funnel_known_id`` — the
+    streaming twin of ``plans/pipeline.decode_audit``: per-micro-batch
+    CollectMetrics on the one plan count the malformed-line and
+    unknown-id losses the reference discards silently.  Same folding
+    (and the same bounded ``recentProgress`` window caveat) as
     ``streaming/curate.streaming_funnel``."""
     from dbc_informed_socketcan_to_parquet_spark.streaming.curate import (
         streaming_funnel,
@@ -95,29 +96,13 @@ def run_stream(
     host: str = "localhost",
     port: int = 9000,
     checkpoint: str = "/tmp/dbc_stream_ckpt",
-    directory: str | None = None,
-    observe_funnel: bool = False,
 ):
-    """Wire source → decode → window → sinks for the live CLI path.
-
-    ``observe_funnel`` adds the decode drop-funnel CollectMetrics
-    (lines → parse → known_id); read them from the returned queries with
-    :func:`decode_stream_funnel`."""
+    """Wire socket source → decode → window → sinks for the live CLI path."""
     from dbc_informed_socketcan_to_parquet_spark.dbc.parser import parse_dbc
 
     spec = parse_dbc(cfg.dbc_path)
     compiler = DecodeCompiler(spec)
-    frames = (
-        stream_candump_dir(spark, directory, observe_funnel=observe_funnel)
-        if directory
-        else stream_candump_socket(spark, host, port, observe_funnel=observe_funnel)
-    )
-    if observe_funnel:
-        # the known-id filter inside decode_wide is idempotent over this
-        # explicit pass — the observe needs its own boundary
-        frames = compiler.known_id_filter(frames).observe(
-            "funnel_known_id", F.count(F.lit(1)).alias("rows")
-        )
+    frames = stream_candump_socket(spark, host, port)
     wide = streaming_decode(frames, compiler)
     sig_cols = [s.column_name for _, s in spec.all_signals()]
     out = streaming_bucket_downsample(wide, cfg.cache_ms or 1.0, sig_cols)

@@ -1,8 +1,10 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import struct
 import sys
+import types
 
 import pytest
 
@@ -83,3 +85,21 @@ def le_line(ts: float, can_id: int, payload: int) -> str:
 
 def f32_bits(x: float) -> int:
     return struct.unpack("<I", struct.pack("<f", x))[0]
+
+
+@contextlib.contextmanager
+def spark_jobs(spark):
+    """Count the Spark jobs the block starts: job ids are sequential, so
+    the count is the newest id after minus the newest id before, read
+    from the status tracker once the listener bus has drained.  Yields
+    an object whose ``n`` holds the count after the block."""
+    sc = spark.sparkContext
+
+    def newest_job() -> int:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return max(sc.statusTracker().getJobIdsForGroup(None), default=-1)
+
+    jobs = types.SimpleNamespace(n=0)
+    first = newest_job()
+    yield jobs
+    jobs.n = newest_job() - first

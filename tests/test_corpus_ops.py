@@ -8,7 +8,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from conftest import SF_SMALL
+from conftest import SF_SMALL, spark_jobs
 
 from dbc_informed_socketcan_to_parquet_spark.operators.dedup import (
     exact_dedup,
@@ -1751,6 +1751,69 @@ def test_cc_driver_fast_path_matches_distributed_loop(spark):
     )
     fast = {(r.doc_id, r.cluster_id) for r in dedup_clusters(df).collect()}
     assert fast == {("a", "a"), ("b", "a"), ("c", "a"), ("x", "x"), ("y", "x")}
+
+
+def test_cc_strategy_and_convergence_run_no_count_jobs(spark):
+    """The edge count that picks the CC path and each round's label sums
+    are observed on the checkpoint jobs that run anyway: the driver path
+    runs 3 jobs (5 with a separate count job) and a one-round loop call
+    11 (16 with separate label-sum jobs)."""
+    from dbc_informed_socketcan_to_parquet_spark.operators.dedup import dedup_clusters
+
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (12, 11)], "id_a long, id_b long")
+    with spark_jobs(spark) as jobs:
+        got = {(r.doc_id, r.cluster_id) for r in dedup_clusters(pairs).collect()}
+    assert got == {(1, 1), (2, 1), (3, 1), (11, 11), (12, 11)}
+    assert jobs.n <= 3
+
+    chain = spark.createDataFrame([(i, i + 1) for i in range(6)], "id_a long, id_b long")
+    with spark_jobs(spark) as jobs, pytest.warns(RuntimeWarning, match="did not converge"):
+        dedup_clusters(chain, max_iters=1, driver_threshold=0).collect()
+    assert jobs.n <= 11
+
+
+def test_measured_small_observes_row_count(spark):
+    """``_measured_small`` reads the row count from its checkpoint's own
+    job, right on an empty frame and at the size boundary."""
+    from dbc_informed_socketcan_to_parquet_spark.functions.checkpoints import durable_checkpoint
+    from dbc_informed_socketcan_to_parquet_spark.operators.dedup import _measured_small
+
+    df = spark.range(5).repartition(2)
+    with spark_jobs(spark) as checkpoint_jobs:
+        durable_checkpoint(df, eager=True)
+    with spark_jobs(spark) as jobs:
+        out, small = _measured_small(df, 5)
+    assert jobs.n == checkpoint_jobs.n
+    assert small and sorted(r.id for r in out.collect()) == [0, 1, 2, 3, 4]
+    assert _measured_small(df, 4)[1] is False
+    empty, small = _measured_small(df.filter("id < 0"), 0)
+    assert small and empty.count() == 0
+
+
+def test_counted_checkpoint_aggregates_when_observation_stays_empty(spark, monkeypatch):
+    """Spark Connect's checkpoint command returns no observed metrics, so
+    its ``Observation`` stays empty: ``counted_checkpoint`` then runs the
+    aggregates on the checkpointed frame, and its callers answer the same."""
+    from pyspark.sql import Observation
+
+    from dbc_informed_socketcan_to_parquet_spark.functions import checkpoints
+    from dbc_informed_socketcan_to_parquet_spark.operators.dedup import _measured_small, dedup_clusters
+
+    class Unfilled(Observation):
+        @property
+        def get(self):
+            return {}
+
+    monkeypatch.setattr(checkpoints, "Observation", Unfilled)
+    df = spark.range(5)
+    assert checkpoints.counted_checkpoint(df)[1] == (5,)
+    assert checkpoints.counted_checkpoint(df, F.sum("id"), F.max("id"))[1] == (10, 4)
+    assert _measured_small(df, 5)[1] and not _measured_small(df, 4)[1]
+    assert _measured_small(df.filter("id < 0"), 0)[1]
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (12, 11)], "id_a long, id_b long")
+    for threshold in (1_000_000, 0):  # driver path, then the label loop
+        got = {(r.doc_id, r.cluster_id) for r in dedup_clusters(pairs, driver_threshold=threshold).collect()}
+        assert got == {(1, 1), (2, 1), (3, 1), (11, 11), (12, 11)}
 
 
 # -- classifier_train (operators/textops.py, r9) -----------------------------

@@ -18,7 +18,7 @@ from dbc_informed_socketcan_to_parquet_spark.dbc.parser import parse_dbc_text
 from dbc_informed_socketcan_to_parquet_spark.dbc.spec import DbcSpec, SignalSpec
 from dbc_informed_socketcan_to_parquet_spark.functions.candump import parse_candump_lines
 
-from tests.conftest import TINY_DBC_TEXT, f32_bits, le_line
+from tests.conftest import TINY_DBC_TEXT, f32_bits, le_line, spark_jobs
 
 
 def _decode(spark, spec, lines):
@@ -187,3 +187,19 @@ def test_decode_audit_funnel(spark, tiny_spec):
     assert funnel["known_id"].rows_in == funnel["parse"].rows_out == 3
     assert funnel["known_id"].dropped == 1
     assert funnel["known_id"].rows_out == 2
+
+
+def test_decode_audit_runs_the_chain_once(spark, tiny_spec):
+    """decode_audit observes its three counts on one pass of the chain:
+    at most 2 Spark jobs with the funnel's own collect (7 with a count
+    job per stage)."""
+    from dbc_informed_socketcan_to_parquet_spark.plans.pipeline import decode_audit
+
+    lines = spark.createDataFrame(
+        [(le_line(1.0, 0x100, 0x0123),), (le_line(1.2, 0x7FF, 0x0789),), ("garbage",)],
+        "value string",
+    )
+    with spark_jobs(spark) as jobs:
+        funnel = {r.stage: (r.rows_in, r.rows_out) for r in decode_audit(lines, tiny_spec).collect()}
+    assert funnel == {"parse": (3, 2), "known_id": (2, 1)}
+    assert jobs.n <= 2

@@ -135,7 +135,8 @@ def test_first_wins_changes_bucket_values(spark, tiny_spec, canlog):
 
 def test_cache0_path_has_no_global_sort(spark, tiny_spec, canlog):
     """Default row-per-frame path must not total-sort the stream: no
-    rangepartitioning exchange, only a partition-local sort."""
+    rangepartitioning exchange, only a partition-local sort.  Time_ms is
+    DOUBLE with or without a whole-ms --cache."""
     cfg = PipelineConfig(input_path=canlog, cache_ms=0)
     out = DecodePipeline(cfg, spec=tiny_spec).run_batch(spark)
     plan = out._jdf.queryExecution().executedPlan().toString()
@@ -146,6 +147,10 @@ def test_cache0_path_has_no_global_sort(spark, tiny_spec, canlog):
     ).run_batch(spark)
     agg_plan = agg_out._jdf.queryExecution().executedPlan().toString()
     assert "rangepartitioning" in agg_plan.lower()
+    cache10 = DecodePipeline(
+        PipelineConfig(input_path=canlog, cache_ms=10), spec=tiny_spec
+    ).run_batch(spark)
+    assert {dict(o.dtypes)["Time_ms"] for o in (out, agg_out, cache10)} == {"double"}
 
 
 def test_stdin_batch_source(spark, tiny_spec, canlog, monkeypatch):
